@@ -2,42 +2,39 @@
 
 The reference walks the tree with a single-process generator
 (file_indexer/indexer.py:184-220) and stats files in batches of 1000
-(:281-289). Here BOTH stages are distributed: directory discovery is an
-iterative BFS of DataFrame expansions (each level's subdirectory listing
-runs on executors; the driver never holds the directory list), and the
-stat stage is an Arrow-batched mapInPandas over the directory frame.
+(:281-289). Here the walk is distributed in rounds: each executor task
+walks depth-first from its seed directories, listing and stat-ing every
+entry of each directory exactly once, and after ``WALK_BUDGET``
+directories hands the ones it has not visited on as ``kind='dir'`` rows.
+Those rows seed the next round, spread over up to ``parallelism``
+tasks. The driver never holds the directory list; it only reads each
+round's count per kind, which is also where the skip and error counters
+come from.
 
 Filter semantics (reference _should_process_file, indexer.py:112-156):
 skip symlinks and non-regular files; empty files are INDEXED but not
 checksummed (that's checksum eligibility, not scan filtering). Skips
 and errors are not silently dropped: every entry carries a ``kind``
-(file / symlink / special / error) so the counters the reference keeps
-in-memory (indexer.py:79-87, 343-351) fall out of one aggregation.
+(file / symlink / special / error), so the counters the reference keeps
+in-memory (indexer.py:79-87, 343-351) fall out of the rounds' counts.
 
-For 100 TB / billions of files the same shape holds: parallelize the
-directory list (or a manifest of prefixes for object stores), let each
-task list+stat its slice, and never materialize file entries on the
-driver.
+For 100 TB / billions of files the same shape holds: a round lists as
+many directories as its tasks' budgets allow, wide trees fan out to
+more tasks in the next round, and file entries never reach the driver.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
+from collections import Counter
 from collections.abc import Iterator
 from datetime import datetime, timezone
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-SCAN_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType(), False),
-        T.StructField("filename", T.StringType(), False),
-        T.StructField("modification_datetime", T.TimestampType(), False),
-        T.StructField("file_size", T.LongType(), False),
-    ]
-)
 
 # raw scan rows: regular files plus skip/error records (D6/D7)
 RAW_SCAN_SCHEMA = T.StructType(
@@ -54,77 +51,25 @@ KIND_FILE = "file"
 KIND_SYMLINK = "symlink"
 KIND_SPECIAL = "special"
 KIND_ERROR = "error"
+KIND_DIR = "dir"  # a directory left for the next round
+
+WALK_BUDGET = 1024  # directories one task lists per round
+MAX_ROUNDS = 1000  # mount-loop backstop; reaching it with work left raises
+ROWS_PER_BATCH = 10_000
 
 
-MAX_TREE_DEPTH = 256  # runaway-symlink/cycle backstop
-
-
-def _list_subdirs(dirs: "pd.DataFrame"):
-    """One BFS expansion step, executor-side: dir → immediate child
-    dirs (symlinked dirs are not descended, matching the reference)."""
-    out = []
-    for d in dirs["dir"]:
-        try:
-            with os.scandir(d) as entries:
-                for e in entries:
-                    try:
-                        if e.is_dir(follow_symlinks=False) and not e.is_symlink():
-                            out.append(e.path)
-                    except OSError:
-                        continue
-        except OSError:
-            continue
-    return out
-
-
-def _dirs_df(spark: SparkSession, root: str, recursive: bool) -> DataFrame:
-    """Distributed directory discovery: iterative BFS where each level
-    is a mapInPandas expansion of the previous level's DataFrame. The
-    driver never materializes the directory list — it only checks each
-    level's count — so billions of files / millions of directories cost
-    O(depth) small jobs, not driver memory. (Replaces the round-1
-    driver-side os.walk; the same shape works against an object-store
-    prefix manifest.)"""
-    import pandas as pd  # noqa: F401  (executor-side type only)
-
-    root = os.path.abspath(root)
-    level = spark.createDataFrame([(root,)], "dir string")
-    if not recursive:
-        return level
-    levels = [level]
-    width = max(2, spark.sparkContext.defaultParallelism)
-
-    def expand(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame({"dir": _list_subdirs(pdf)})
-
-    for _ in range(MAX_TREE_DEPTH):
-        # repartition each level: mapInPandas is a narrow transform, so
-        # without the shuffle the whole BFS would stay in the seed's
-        # single partition and each level's listing would run serially.
-        # localCheckpoint (not cache) so the materialized level is GC'd
-        # with the DataFrame instead of pinning executor storage.
-        level = (
-            level.repartition(width)
-            .mapInPandas(expand, schema="dir string")
-            .localCheckpoint(eager=False)
-        )
-        if level.isEmpty():
-            break
-        levels.append(level)
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
-
-
-def _stat_entries(dirs: Iterator[str]):
-    """Executor task: stat every entry in each directory, tagging skips
-    and errors instead of dropping them (reference indexer.py:343-351
-    counts permission errors; :112-156 skips symlinks/special files)."""
-    for d in dirs:
+def _walk(seeds: list[str], budget: int, recursive: bool):
+    """Executor task: depth-first walk from ``seeds`` that stats every
+    entry of each listed directory, tagging skips and errors instead of
+    dropping them (reference indexer.py:343-351 counts permission
+    errors; :112-156 skips symlinks/special files). Symlinked dirs are
+    not descended, as in the reference. After ``budget`` directories
+    the unlisted ones are yielded as KIND_DIR rows."""
+    stack = seeds[::-1]
+    for _ in range(budget):
+        if not stack:
+            return
+        d = stack.pop()
         try:
             entries = os.scandir(d)
         except OSError:
@@ -137,7 +82,9 @@ def _stat_entries(dirs: Iterator[str]):
                         yield (d, entry.name, None, None, KIND_SYMLINK)
                         continue
                     if entry.is_dir(follow_symlinks=False):
-                        continue  # recursion is the dir list's job
+                        if recursive:
+                            stack.append(entry.path)
+                        continue
                     if not entry.is_file(follow_symlinks=False):
                         yield (d, entry.name, None, None, KIND_SPECIAL)
                         continue
@@ -152,6 +99,8 @@ def _stat_entries(dirs: Iterator[str]):
                     int(st.st_size),
                     KIND_FILE,
                 )
+    for d in stack:
+        yield (d, None, None, None, KIND_DIR)
 
 
 def scan_raw(
@@ -159,32 +108,52 @@ def scan_raw(
     root: str,
     recursive: bool = True,
     parallelism: int | None = None,
-) -> DataFrame:
-    """All scan records including skips/errors (RAW_SCAN_SCHEMA).
+) -> tuple[DataFrame, dict[str, int]]:
+    """(all scan records including skips/errors, their count per kind).
 
-    Fully distributed: directory discovery is an iterative DataFrame
-    expansion (no driver-side walk) and the stat stage is an
-    Arrow-batched mapInPandas over the directory DataFrame (no
-    row-at-a-time Python-RDD pickling)."""
-    import pandas as pd  # noqa: F401
+    Runs the walk rounds eagerly; each round is materialized once by
+    the job that counts its kinds. localCheckpoint (not cache): the
+    stored partitions are released when the DataFrame is
+    garbage-collected, so repeated incremental runs in one session
+    don't pin executor storage."""
+    import pandas as pd  # noqa: F401  (executor-side type only)
 
-    dirs = _dirs_df(spark, root, recursive)
-    n = parallelism or spark.sparkContext.defaultParallelism * 2
-    cols = [f.name for f in RAW_SCAN_SCHEMA.fields]
+    budget = WALK_BUDGET  # captured: executors never read the global
+    width = parallelism or spark.sparkContext.defaultParallelism
+    cols = RAW_SCAN_SCHEMA.fieldNames()
 
-    def stat_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def walk(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
-        for pdf in batches:
-            rows = list(_stat_entries(iter(pdf["dir"])))
-            yield pd.DataFrame(rows, columns=cols)
+        rows = _walk([p for pdf in batches for p in pdf["path"]], budget, recursive)
+        while chunk := list(itertools.islice(rows, ROWS_PER_BATCH)):
+            yield pd.DataFrame(chunk, columns=cols)
 
-    raw = dirs.repartition(n).mapInPandas(
-        stat_batches,
-        schema="path string, filename string, modification_datetime timestamp, "
-        "file_size long, kind string",
-    )
-    return raw
+    # round 1 runs on the root's single partition (createDataFrame of a
+    # local list would spread it over defaultParallelism, mostly empty)
+    frontier = spark.range(1, numPartitions=1).select(F.lit(os.path.abspath(root)).alias("path"))
+    rounds, counts = [], Counter()
+    for _ in range(MAX_ROUNDS):
+        done = frontier.mapInPandas(walk, schema=RAW_SCAN_SCHEMA).localCheckpoint(eager=False)
+        rounds.append(done)
+        counts.update({r["kind"]: r["count"] for r in done.groupBy("kind").count().collect()})
+        pending = counts.pop(KIND_DIR, 0)
+        if not pending:
+            break
+        # mapInPandas is narrow: without the shuffle the next round
+        # would stay in this round's partitions
+        frontier = (
+            done.filter(F.col("kind") == KIND_DIR)
+            .select("path")
+            .repartition(min(width, pending))
+        )
+    else:
+        raise RuntimeError(
+            f"scan of {root!r} stopped after {MAX_ROUNDS} rounds with "
+            f"{pending} directories not listed"
+        )
+    raw = reduce(DataFrame.unionByName, rounds).filter(F.col("kind") != KIND_DIR)
+    return raw, dict(counts)
 
 
 def scan_directory(
@@ -196,8 +165,7 @@ def scan_directory(
     """Scan a tree into a (path, filename, modification_datetime,
     file_size) DataFrame of regular files. mtimes are naive-UTC,
     matching the engine's UTC session timezone (SURVEY §7)."""
-    raw = scan_raw(spark, root, recursive, parallelism)
-    return raw.filter(F.col("kind") == KIND_FILE).drop("kind")
+    return scan_with_counters(spark, root, recursive, parallelism)[0]
 
 
 def scan_with_counters(
@@ -207,13 +175,9 @@ def scan_with_counters(
     parallelism: int | None = None,
 ) -> tuple[DataFrame, dict[str, int]]:
     """(files DataFrame, skip/error counters) — D7's session counters
-    computed distributedly from the tagged scan, one extra aggregation
-    over the materialized raw scan instead of mutable in-memory state.
-    localCheckpoint (not cache): the stored partitions are released when
-    the DataFrame is garbage-collected, so repeated incremental runs in
-    one session don't pin executor storage."""
-    raw = scan_raw(spark, root, recursive, parallelism).localCheckpoint(eager=False)
-    counts = {r["kind"]: r["n"] for r in raw.groupBy("kind").agg(F.count("*").alias("n")).collect()}
+    taken from the walk rounds' kind counts instead of mutable
+    in-memory state; no extra job."""
+    raw, counts = scan_raw(spark, root, recursive, parallelism)
     files = raw.filter(F.col("kind") == KIND_FILE).drop("kind")
     counters = {
         "symlinks_skipped": counts.get(KIND_SYMLINK, 0),

@@ -112,24 +112,24 @@ def update_index(
             F.col("new_mtime").alias("modification_datetime"),
             F.col("new_size").alias("file_size"),
         )
-        eligible = checksum_eligible_expr(max_checksum_size, skip_empty_files)
-        to_hash = changed.filter(eligible)
-        no_hash = changed.filter(~eligible).withColumn("checksum", F.lit(None).cast("string"))
-        # cache: count() and upsert() both consume it — without the cache
-        # every changed file would be opened and hashed twice (and could
-        # even hash differently between the two executions)
-        hashed = add_checksums(to_hash, algorithm).cache()
-        n_hashed = hashed.count()
-        # every to_hash row was eligible, so a NULL checksum here means
-        # the executor could not read the file (reference D6 counts
-        # permission errors without failing the run, indexer.py:343-351)
-        n_hash_errors = hashed.filter(F.col("checksum").isNull()).count()
-
-        upserts = (
-            hashed.unionByName(no_hash.select(hashed.columns))
-            .withColumn("indexed_at", F.current_timestamp())
-        )
-        table.upsert(upserts)
+        n_hashed = n_hash_errors = 0
+        if max_checksum_size is not None and max_checksum_size < 0:
+            # hashing off (phase 1, reference :1452-1476): no hashing job
+            upserts = changed.withColumn("checksum", F.lit(None).cast("string"))
+        else:
+            eligible = checksum_eligible_expr(max_checksum_size, skip_empty_files)
+            no_hash = changed.filter(~eligible).withColumn("checksum", F.lit(None).cast("string"))
+            # cache: the counts and upsert() both consume it — without the
+            # cache every changed file would be opened and hashed twice
+            # (and could even hash differently between the two executions)
+            hashed = add_checksums(changed.filter(eligible), algorithm).cache()
+            # every hashed row was eligible, so a NULL checksum means the
+            # executor could not read the file (reference D6 counts
+            # permission errors without failing the run, indexer.py:343-351)
+            got = hashed.agg(F.count("*").alias("n"), F.count("checksum").alias("ok")).first()
+            n_hashed, n_hash_errors = got["n"], got["n"] - got["ok"]
+            upserts = hashed.unionByName(no_hash.select(hashed.columns))
+        table.upsert(upserts.withColumn("indexed_at", F.current_timestamp()))
 
         return IndexStats(
             files_inserted=counts.get("insert", (0, 0))[0],

@@ -11,11 +11,14 @@ incremental/reuse at :260-349, two-phase at :495-786, cleanup at
 from __future__ import annotations
 
 import hashlib
+import itertools
 import os
+import stat
 
 import pytest
 from pyspark.sql import functions as F
 
+from file_indexer_spark.indexer import scan, two_phase
 from file_indexer_spark.indexer.checksum import add_checksums
 from file_indexer_spark.indexer.cleanup import (
     cleanup_deleted_files,
@@ -78,6 +81,106 @@ def test_scan_counts_symlinks_and_special_files(spark, tree):
     assert files.count() == 5
 
 
+def _local_walk(root: str, recursive: bool):
+    """(regular files as (path, filename, size), counters) from a local
+    os.walk — the oracle of the distributed walk."""
+    files, errors = set(), []
+    counters = {"symlinks_skipped": 0, "special_files_skipped": 0, "scan_errors": 0}
+    for d, dirnames, filenames in os.walk(root, onerror=errors.append):
+        # os.walk lists symlinks to directories among the directories
+        counters["symlinks_skipped"] += sum(os.path.islink(os.path.join(d, n)) for n in dirnames)
+        for name in filenames:
+            st = os.lstat(os.path.join(d, name))
+            if stat.S_ISLNK(st.st_mode):
+                counters["symlinks_skipped"] += 1
+            elif stat.S_ISREG(st.st_mode):
+                files.add((d, name, st.st_size))
+            else:
+                counters["special_files_skipped"] += 1
+        if not recursive:
+            break
+    counters["scan_errors"] = len(errors)
+    counters["files_found"] = len(files)
+    return files, counters
+
+
+@pytest.fixture()
+def walk_tree(tmp_path):
+    """Three levels of fan-out, symlinks to a file and to a directory, a
+    FIFO, and a directory whose path is too long to list (ENAMETOOLONG
+    fails the listing even for root)."""
+    root = tmp_path / "walk"
+    for i in range(3):
+        for j in range(3):
+            d = root / f"a{i}" / f"b{j}"
+            d.mkdir(parents=True)
+            for k in range(2):
+                (d / f"f{k}.txt").write_text("x" * (i * 10 + j + k))
+    (root / "top.txt").write_text("top")
+    os.symlink(str(root / "top.txt"), str(root / "link.txt"))
+    os.symlink(str(root / "a0"), str(root / "a1" / "dirlink"))
+    os.mkfifo(str(root / "a2" / "pipe"))
+    fd = os.open(str(root / "a2"), os.O_RDONLY)
+    try:
+        for _ in range(20):  # 20 x 250 chars > PATH_MAX
+            os.mkdir("d" * 250, dir_fd=fd)
+            child = os.open("d" * 250, os.O_RDONLY, dir_fd=fd)
+            os.close(fd)
+            fd = child
+    finally:
+        os.close(fd)
+    return str(root)
+
+
+@pytest.mark.parametrize("recursive", [True, False])
+def test_scan_multi_round_walk_equals_local_walk(spark, walk_tree, monkeypatch, recursive):
+    """A walk budget of 2 directories per task forces many rounds; the
+    result and every counter must still equal a local os.walk."""
+    monkeypatch.setattr(scan, "WALK_BUDGET", 2)
+    want_files, want_counters = _local_walk(walk_tree, recursive)
+    files, counters = scan_with_counters(spark, walk_tree, recursive)
+    got = {(r["path"], r["filename"], r["file_size"]) for r in files.collect()}
+    assert got == want_files
+    assert counters == want_counters
+    if recursive:
+        assert counters["scan_errors"] == 1 and counters["special_files_skipped"] == 1
+        assert counters["symlinks_skipped"] == 2
+
+
+def test_scan_never_truncates_deep_chain(spark, tmp_path, monkeypatch):
+    """A 300-level chain is found; a round cap reached with directories
+    still pending raises instead of dropping them."""
+    deep = tmp_path / "chain" / os.path.join(*["d"] * 300)
+    deep.mkdir(parents=True)
+    (deep / "bottom.txt").write_text("bottom")
+    rows = scan_directory(spark, str(tmp_path / "chain")).collect()
+    assert [(r["path"], r["filename"]) for r in rows] == [(str(deep), "bottom.txt")]
+
+    monkeypatch.setattr(scan, "WALK_BUDGET", 2)
+    monkeypatch.setattr(scan, "MAX_ROUNDS", 3)
+    with pytest.raises(RuntimeError, match="not listed"):
+        scan_directory(spark, str(tmp_path / "chain"))
+
+
+def test_scan_job_count_does_not_grow_with_depth(spark, tmp_path):
+    """A depth-4 tree is scanned in a fixed small number of jobs, not
+    one (or more) per tree level."""
+    root = tmp_path / "depth4"
+    for parts in itertools.product(range(2), repeat=4):
+        d = root.joinpath(*(f"l{n}" for n in parts))
+        d.mkdir(parents=True)
+        (d / "f.txt").write_text("f")
+    sc = spark.sparkContext
+    sc.setJobGroup("scan-job-guard", "scan job-count guard")
+    try:
+        _, counters = scan_with_counters(spark, str(root))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counters["files_found"] == 16
+    assert len(sc.statusTracker().getJobIdsForGroup("scan-job-guard")) <= 3
+
+
 # ----------------------------------------------------------- checksums
 
 def test_checksums_match_hashlib(spark, tree, table):
@@ -110,6 +213,31 @@ def test_update_index_counts(spark, tree, table):
     assert stats.files_updated == 0
     assert stats.checksums_calculated == 4
     assert stats.extra["hash_errors"] == 0
+
+
+def test_update_index_with_hashing_off_builds_no_hash_stage(spark, tree, table, monkeypatch):
+    """max_checksum_size < 0 (phase 1) skips the hashing stage and its
+    counts altogether."""
+
+    def no_hashing(*args, **kwargs):
+        raise AssertionError("hashing stage built with hashing off")
+
+    monkeypatch.setattr(two_phase, "add_checksums", no_hashing)
+    stats = update_index(spark, table, str(tree), max_checksum_size=-1)
+    assert stats.files_inserted == 5
+    assert stats.checksums_calculated == 0 and stats.extra["hash_errors"] == 0
+    assert {r["checksum"] for r in table.read().collect()} == {None}
+
+
+def test_update_index_counts_unreadable_files_as_hash_errors(spark, tree, table):
+    scanned = scan_directory(spark, str(tree))
+    ghost = scanned.filter(F.col("filename") == "file1.txt").withColumn(
+        "filename", F.lit("vanished.txt")
+    )
+    stats = update_index(spark, table, str(tree), scanned=scanned.unionByName(ghost))
+    assert stats.files_inserted == 6
+    assert stats.checksums_calculated == 4
+    assert stats.extra["hash_errors"] == 1
 
 
 def test_rerun_reuses_checksums(spark, tree, table):
@@ -411,7 +539,7 @@ def test_bucketed_delete_and_delete_paths(spark, bucketed):
 
 
 def test_scan_wide_tree_distributed(spark, tmp_path):
-    """Distributed BFS listing: many dirs across several levels, no
+    """Distributed walk rounds: many dirs across several levels, no
     driver-side walk (VERDICT r1 #9). Output must equal a local walk."""
     root = tmp_path / "wide"
     expected = set()
