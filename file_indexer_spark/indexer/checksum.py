@@ -27,14 +27,19 @@ CHUNK_SIZE = 64 * 1024  # reference indexer.py:38
 DEFAULT_MAX_CHECKSUM_SIZE = 100 * 1024 * 1024  # reference cli.py:69-70
 
 
+def hashing_off(max_checksum_size: int | None) -> bool:
+    """Negative => never hash (reference :1452-1476 phase 1)."""
+    return max_checksum_size is not None and max_checksum_size < 0
+
+
 def checksum_eligible_expr(
     max_checksum_size: int = DEFAULT_MAX_CHECKSUM_SIZE,
     skip_empty_files: bool = True,
     file_size: Column | str = "file_size",
 ) -> Column:
     col = F.col(file_size) if isinstance(file_size, str) else file_size
-    if max_checksum_size is not None and max_checksum_size < 0:
-        return F.lit(False)  # negative => never hash (reference :1452-1476 phase 1)
+    if hashing_off(max_checksum_size):
+        return F.lit(False)
     expr = F.lit(True)
     if skip_empty_files:
         expr = expr & (col > 0)

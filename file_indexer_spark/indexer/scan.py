@@ -3,13 +3,16 @@
 The reference walks the tree with a single-process generator
 (file_indexer/indexer.py:184-220) and stats files in batches of 1000
 (:281-289). Here the walk is distributed in rounds: each executor task
-walks depth-first from its seed directories, listing and stat-ing every
-entry of each directory exactly once, and after ``WALK_BUDGET``
-directories hands the ones it has not visited on as ``kind='dir'`` rows.
-Those rows seed the next round, spread over up to ``parallelism``
-tasks. The driver never holds the directory list; it only reads each
-round's count per kind, which is also where the skip and error counters
-come from.
+lists and stats every entry of its seed directories, then walks on
+depth-first into the subdirectories it found until it has listed
+``WALK_BUDGET`` entries, and hands the ones it has not visited on as
+``kind='dir'`` rows. Those rows seed the next round, which lists all of
+them, spread over enough tasks that none gets more than ``WALK_BUDGET``
+seeds and the cores stay busy. Every round therefore lists the whole
+frontier, so a tree needs at most one round per level however wide it
+is, and usually far fewer. The driver never holds the directory list;
+it only reads each round's count per kind, which is also where the
+skip and error counters come from.
 
 Filter semantics (reference _should_process_file, indexer.py:112-156):
 skip symlinks and non-regular files; empty files are INDEXED but not
@@ -18,9 +21,9 @@ and errors are not silently dropped: every entry carries a ``kind``
 (file / symlink / special / error), so the counters the reference keeps
 in-memory (indexer.py:79-87, 343-351) fall out of the rounds' counts.
 
-For 100 TB / billions of files the same shape holds: a round lists as
-many directories as its tasks' budgets allow, wide trees fan out to
-more tasks in the next round, and file entries never reach the driver.
+For 100 TB / billions of files the same shape holds: wide trees fan
+out to more tasks in the next round, and file entries never reach the
+driver.
 """
 
 from __future__ import annotations
@@ -53,54 +56,70 @@ KIND_SPECIAL = "special"
 KIND_ERROR = "error"
 KIND_DIR = "dir"  # a directory left for the next round
 
-WALK_BUDGET = 1024  # directories one task lists per round
+# entries a task lists before handing subdirectories on: ~50 ms of
+# listing at ~6 us per entry, about what one more round costs
+# (PERFORMANCE.md "Write path")
+WALK_BUDGET = 8192
 MAX_ROUNDS = 1000  # mount-loop backstop; reaching it with work left raises
 ROWS_PER_BATCH = 10_000
 
 
-def _walk(seeds: list[str], budget: int, recursive: bool):
-    """Executor task: depth-first walk from ``seeds`` that stats every
-    entry of each listed directory, tagging skips and errors instead of
-    dropping them (reference indexer.py:343-351 counts permission
-    errors; :112-156 skips symlinks/special files). Symlinked dirs are
-    not descended, as in the reference. After ``budget`` directories
-    the unlisted ones are yielded as KIND_DIR rows."""
-    stack = seeds[::-1]
-    for _ in range(budget):
-        if not stack:
-            return
-        d = stack.pop()
-        try:
-            entries = os.scandir(d)
-        except OSError:
-            yield (d, None, None, None, KIND_ERROR)
-            continue
-        with entries:
-            for entry in entries:
-                try:
-                    if entry.is_symlink():
-                        yield (d, entry.name, None, None, KIND_SYMLINK)
-                        continue
-                    if entry.is_dir(follow_symlinks=False):
-                        if recursive:
-                            stack.append(entry.path)
-                        continue
-                    if not entry.is_file(follow_symlinks=False):
-                        yield (d, entry.name, None, None, KIND_SPECIAL)
-                        continue
-                    st = entry.stat(follow_symlinks=False)
-                except OSError:
-                    yield (d, entry.name, None, None, KIND_ERROR)
+def _list_dir(d: str, subdirs: list[str]):
+    """Rows for the entries of ``d`` that are not directories, tagging
+    skips and errors instead of dropping them (reference
+    indexer.py:343-351 counts permission errors; :112-156 skips
+    symlinks/special files); its subdirectories go to ``subdirs``.
+    Symlinked dirs are not descended, as in the reference."""
+    try:
+        entries = os.scandir(d)
+    except OSError:
+        yield (d, None, None, None, KIND_ERROR)
+        return
+    with entries:
+        for entry in entries:
+            try:
+                if entry.is_symlink():
+                    yield (d, entry.name, None, None, KIND_SYMLINK)
                     continue
-                yield (
-                    d,
-                    entry.name,
-                    datetime.fromtimestamp(st.st_mtime, tz=timezone.utc).replace(tzinfo=None),
-                    int(st.st_size),
-                    KIND_FILE,
-                )
-    for d in stack:
-        yield (d, None, None, None, KIND_DIR)
+                if entry.is_dir(follow_symlinks=False):
+                    subdirs.append(entry.path)
+                    continue
+                if not entry.is_file(follow_symlinks=False):
+                    yield (d, entry.name, None, None, KIND_SPECIAL)
+                    continue
+                st = entry.stat(follow_symlinks=False)
+            except OSError:
+                yield (d, entry.name, None, None, KIND_ERROR)
+                continue
+            yield (
+                d,
+                entry.name,
+                datetime.fromtimestamp(st.st_mtime, tz=timezone.utc).replace(tzinfo=None),
+                int(st.st_size),
+                KIND_FILE,
+            )
+
+
+def _walk(seeds: list[str], budget: int, recursive: bool):
+    """Executor task: list every seed, each followed by a depth-first
+    walk of its subtree while fewer than ``budget`` entries have been
+    listed; the subdirectories found but not listed are yielded as
+    KIND_DIR rows."""
+    listed = 0
+    for seed in seeds:
+        stack = [seed]
+        while stack:
+            subdirs: list[str] = []
+            for row in _list_dir(stack.pop(), subdirs):
+                listed += 1
+                yield row
+            listed += 1 + len(subdirs)  # the listing itself: empty dirs cost too
+            if recursive:
+                stack.extend(subdirs)
+            if listed >= budget:
+                for d in stack:
+                    yield (d, None, None, None, KIND_DIR)
+                break
 
 
 def scan_raw(
@@ -140,12 +159,14 @@ def scan_raw(
         pending = counts.pop(KIND_DIR, 0)
         if not pending:
             break
-        # mapInPandas is narrow: without the shuffle the next round
-        # would stay in this round's partitions
+        # every pending dir is listed next round: at most ``budget``
+        # seeds per task, and at least one task per core while there
+        # are dirs for it (mapInPandas is narrow, so without the
+        # shuffle the next round would stay in this round's partitions)
         frontier = (
             done.filter(F.col("kind") == KIND_DIR)
             .select("path")
-            .repartition(min(width, pending))
+            .repartition(max(min(width, pending), -(-pending // budget)))
         )
     else:
         raise RuntimeError(

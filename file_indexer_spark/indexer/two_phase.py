@@ -26,6 +26,7 @@ from file_indexer_spark.indexer.checksum import (
     DEFAULT_MAX_CHECKSUM_SIZE,
     add_checksums,
     checksum_eligible_expr,
+    hashing_off,
 )
 from file_indexer_spark.indexer.files_table import PK, FilesTable
 from file_indexer_spark.indexer.scan import scan_with_counters
@@ -113,8 +114,7 @@ def update_index(
             F.col("new_size").alias("file_size"),
         )
         n_hashed = n_hash_errors = 0
-        if max_checksum_size is not None and max_checksum_size < 0:
-            # hashing off (phase 1, reference :1452-1476): no hashing job
+        if hashing_off(max_checksum_size):  # phase 1: no hashing job
             upserts = changed.withColumn("checksum", F.lit(None).cast("string"))
         else:
             eligible = checksum_eligible_expr(max_checksum_size, skip_empty_files)

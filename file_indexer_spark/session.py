@@ -15,16 +15,6 @@ from pyspark.sql import SparkSession
 
 import file_indexer_spark
 
-# Tungsten page size, fixed instead of Spark's default of execution
-# memory / cores / 16 rounded up to a power of two: 32 MB with a 3 GB
-# driver on 4 cores. Every hash-aggregate or sort task takes at least
-# one page, so on the write path's small tasks the default made each
-# task allocate 32 MB of heap, and the heap grew with every op: after
-# four `index` ops the driver's peak RSS was 2181 MB, against 1749 MB
-# with 2 MB pages at the same CPU time (4-vCPU VM). Larger records get
-# a page of their own, so this caps nothing.
-PAGE_SIZE = "2m"
-
 # Python workers run under pydaemon.py, which stops PySpark from
 # re-parsing pyspark.zip on every task; its package root goes on the
 # workers' PYTHONPATH so the daemon imports from any driver cwd.
@@ -78,7 +68,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.buffer.pageSize", PAGE_SIZE)
         .config("spark.python.daemon.module", PYTHON_DAEMON)
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
     )

@@ -134,7 +134,7 @@ def walk_tree(tmp_path):
 
 @pytest.mark.parametrize("recursive", [True, False])
 def test_scan_multi_round_walk_equals_local_walk(spark, walk_tree, monkeypatch, recursive):
-    """A walk budget of 2 directories per task forces many rounds; the
+    """A walk budget of 2 entries per task forces many rounds; the
     result and every counter must still equal a local os.walk."""
     monkeypatch.setattr(scan, "WALK_BUDGET", 2)
     want_files, want_counters = _local_walk(walk_tree, recursive)
@@ -160,6 +160,23 @@ def test_scan_never_truncates_deep_chain(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(scan, "MAX_ROUNDS", 3)
     with pytest.raises(RuntimeError, match="not listed"):
         scan_directory(spark, str(tmp_path / "chain"))
+
+
+def test_scan_rounds_do_not_grow_with_width(spark, tmp_path, monkeypatch):
+    """Each round lists every directory the previous one handed on, so
+    a tree of three levels (root, 40 dirs, 40 leaves) takes three rounds
+    even when a task's budget covers only two entries."""
+    root = tmp_path / "flat"
+    expected = set()
+    for i in range(40):
+        d = root / f"d{i}" / "leaf"
+        d.mkdir(parents=True)
+        (d / "f.txt").write_text(str(i))
+        expected.add((str(d), "f.txt"))
+    monkeypatch.setattr(scan, "WALK_BUDGET", 2)
+    monkeypatch.setattr(scan, "MAX_ROUNDS", 3)
+    rows = scan_directory(spark, str(root)).collect()
+    assert {(r["path"], r["filename"]) for r in rows} == expected
 
 
 def test_scan_job_count_does_not_grow_with_depth(spark, tmp_path):
