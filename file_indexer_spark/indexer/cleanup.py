@@ -59,7 +59,11 @@ def probe_deleted_files(table: FilesTable) -> DataFrame:
     directory-first. Phase 1 checks each DISTINCT path once (the
     reference's _check_directory_existence, indexer.py:926-947); files
     under missing dirs are stale without any per-file syscall. Phase 2
-    stats only files in surviving dirs."""
+    stats only files in surviving dirs.
+
+    The result is materialized here (eager local checkpoint), so the
+    caller's count and delete see the same rows and neither re-runs
+    the stat passes."""
     files = table.read()
     dirs = files.select("path").distinct()
 
@@ -88,7 +92,7 @@ def probe_deleted_files(table: FilesTable) -> DataFrame:
         .filter(~F.col("file_exists"))
         .select(*PK)
     )
-    return in_dead_dir.unionByName(missing_files)
+    return in_dead_dir.unionByName(missing_files).localCheckpoint(eager=True)
 
 
 def cleanup_empty_directories(spark: SparkSession, table: FilesTable) -> int:

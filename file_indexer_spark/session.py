@@ -42,6 +42,18 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # "" to keep the JVM default.
 GC_OPTS = os.environ.get("SPARK_GRAFT_GC_OPTS", "-XX:+UseParallelGC")
 
+# Spark's generated-code cache is a static conf; by default it keeps 100
+# compiled classes. An entry is keyed by source and class loader, so a
+# stage's planning-time check compile and its tasks' copy take two. One op
+# of this engine uses more than 100, so the LRU evicted each class before
+# its next use: measured on the benchmark (4-vCPU VM, local[4]), a warm
+# `index` op Janino-compiled ~180 classes and a catalog request 6-29, and
+# HotSpot JIT-compiled every new class again. The bound covers the
+# largest working set measured without misses, 330 classes for one pass
+# of dd19, with headroom because Guava splits it over 4 segments
+# (PERFORMANCE.md, "Measured engine facts" 5).
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = "file_indexer_spark",
@@ -75,28 +87,39 @@ def get_spark(
         builder = builder.config(
             "spark.driver.extraJavaOptions", GC_OPTS
         ).config("spark.executor.extraJavaOptions", GC_OPTS)
+    builder = builder.config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # driver extraJavaOptions and static SQL confs only take effect when
+    # THIS process launched the JVM; if getOrCreate returned an
+    # already-running session they were silently ignored — make that
+    # visible instead of benchmarking under the wrong collector or
+    # codegen cache (ADVICE r12).
+    ignored = []
     if GC_OPTS:
-        # driver extraJavaOptions only take effect when THIS process
-        # launched the JVM; if getOrCreate returned an already-running
-        # session the collector flag was silently ignored — make that
-        # visible instead of benchmarking under the wrong collector
-        # (ADVICE r12).
-        try:
-            active = spark.conf.get("spark.driver.extraJavaOptions", "")
-        except Exception:
-            active = ""
-        if GC_OPTS not in (active or ""):
-            import warnings
+        active = spark.conf.get("spark.driver.extraJavaOptions", "") or ""
+        if GC_OPTS not in active:
+            ignored.append(f"GC opts {GC_OPTS!r} (spark.driver.extraJavaOptions is {active!r})")
+    cache = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    if cache != str(CODEGEN_CACHE_ENTRIES):
+        ignored.append(
+            f"spark.sql.codegen.cache.maxEntries={CODEGEN_CACHE_ENTRIES} (active: {cache})"
+        )
+    if ignored:
+        import warnings
 
-            warnings.warn(
-                f"GC opts {GC_OPTS!r} not present in the active session's "
-                f"spark.driver.extraJavaOptions ({active!r}) — the JVM was "
-                "created elsewhere; collector default NOT applied",
-                stacklevel=2,
-            )
+        warnings.warn(
+            "the JVM was created elsewhere; NOT applied: " + "; ".join(ignored),
+            stacklevel=2,
+        )
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far: one per miss of
+    the generated-code cache."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
@@ -104,7 +127,9 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
     The correctness driver hands us its own SparkSession; timestamp
     comparisons against the DuckDB oracle require UTC session time and
-    we want AQE on for every operator. Only runtime-mutable confs here.
+    we want AQE on for every operator. Only runtime-mutable confs here:
+    static ones (the GC flag, ``spark.sql.codegen.cache.maxEntries``)
+    cannot be set on a running JVM; only ``get_spark`` applies them.
     """
     for key, value in (
         ("spark.sql.session.timeZone", "UTC"),

@@ -5,10 +5,13 @@ before/after isolation without paying the full-suite run.
 Usage:
     python scripts/bench_subset.py [-n REPS] query [query ...]
 
-Prints one JSON line {"queries": {name: sec}, "sf": ..., "reps": N}.
-Methodology mirrors bench.py: each query fully executes via the noop
-sink; a warm-up pass precedes measurement; GC between reps (the
-localCheckpoint reaper); min of reps reported.
+Prints one JSON line {"queries": {name: sec}, "compiles": {name: n},
+"sf": ..., "reps": N}. Methodology mirrors bench.py: each query fully
+executes via the noop sink; a warm-up pass precedes measurement; GC
+between reps (the localCheckpoint reaper); min of reps reported.
+"compiles" counts the classes Janino compiled over a query's measured
+reps: after the warm-up a query whose plan shapes repeat and stay
+cached compiles none, so a rise shows a plan-shape or caching change.
 """
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 from bench import _reap, run_query_safe  # noqa: E402
 from file_indexer_spark import registry  # noqa: E402
-from file_indexer_spark.session import get_spark  # noqa: E402
+from file_indexer_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -47,10 +50,12 @@ def main() -> None:
         run_query_safe(registry.QUERIES[name], spark, sf_dir, errors, name)
         _reap(spark)
     timings: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     for name in names:
         if name in errors:
             continue
         best = None
+        compiled = codegen_compiles(spark)
         for _ in range(reps):
             spark.sparkContext.setJobDescription(f"measure {name}")
             t = run_query_safe(registry.QUERIES[name], spark, sf_dir, errors, name)
@@ -62,7 +67,8 @@ def main() -> None:
             # belongs in errors ONLY — recording its earlier best too would
             # make the JSON ambiguous
             timings[name] = round(best, 4)
-    out = {"queries": timings, "sf": sf, "reps": reps}
+            compiles[name] = codegen_compiles(spark) - compiled
+    out = {"queries": timings, "compiles": compiles, "sf": sf, "reps": reps}
     if errors:
         out["errors"] = errors
     print(json.dumps(out))

@@ -356,6 +356,18 @@ def test_probe_mode_detects_deletions(spark, tree, table):
     }
 
 
+def test_probe_rows_fixed_at_probe_time(spark, tree, table):
+    """The CLI counts the probe's rows and then deletes them; a file
+    deleted in between must change neither, or the printed count and
+    the rows removed disagree."""
+    update_index(spark, table, str(tree))
+    (tree / "file1.txt").unlink()
+    stale = probe_deleted_files(table)
+    (tree / "file3.txt").unlink()
+    assert {(r["path"], r["filename"]) for r in stale.collect()} == {(str(tree), "file1.txt")}
+    assert stale.count() == 1
+
+
 def test_cleanup_empty_directories(spark, tree, table):
     update_index(spark, table, str(tree))
     import shutil
