@@ -24,11 +24,6 @@ from file_indexer_spark.indexer.files_table import PK, FilesTable
 from file_indexer_spark.indexer.scan import scan_directory
 
 
-def find_stale_files(table: FilesTable, fresh_scan: DataFrame) -> DataFrame:
-    """Rows indexed under the scanned roots that no longer exist on disk."""
-    return table.read().join(fresh_scan.select(*PK), PK, "left_anti")
-
-
 def cleanup_deleted_files(
     spark: SparkSession,
     table: FilesTable,

@@ -27,8 +27,14 @@ Commit protocol (the Delta/Iceberg shape, minimally):
     generation when it beats the cached one, so a writer crashing
     between link and refresh self-heals on the next read.
 
-Concurrency contract: readers are always consistent (atomic log
-entries + immutable dirs). Writers are CONFLICT-DETECTED (w9, the
+Concurrency contract: resolution is always consistent (atomic log
+entries + immutable dirs) — a reader sees one whole generation, never
+a torn mix. A DataFrame is bound to the dirs it resolved, though, and
+a no-history table deletes the dirs a commit replaces inline: a
+DataFrame resolved before a later commit raises ``FILE_NOT_EXIST``
+when it runs instead of returning partial rows. Re-resolve after a
+commit, or keep history (replaced dirs then live until
+:meth:`vacuum`). Writers are CONFLICT-DETECTED (w9, the
 Delta/Iceberg optimistic-concurrency shape): every mutating operation
 snapshots the manifest generation before it reads, the commit refuses
 with :class:`ConcurrentWriteError` if the generation advanced since,
@@ -45,9 +51,16 @@ table by ``xxhash64(path) % N``: upsert/delete then (a) compute the
 buckets its keys touch, (b) read ONLY those buckets' dirs (manifest
 pruning), and (c) commit new dirs for only those buckets — I/O
 proportional to the touched slice, not the table. Bucketing on
-``path`` alone keeps directory-level deletes prunable too. The public
-API (upsert / delete / overwrite) is storage-agnostic so a Delta
-backend can slot in unchanged.
+``path`` alone keeps directory-level deletes prunable too. upsert,
+delete and delete_paths are one MERGE (:meth:`_merge`) that differs
+only in its anti-join keys and whether rows are added; it and
+overwrite stage and commit through one path (:meth:`_commit_rows`). The
+public API (upsert / delete / overwrite) is storage-agnostic so a
+Delta backend can slot in unchanged.
+
+A location that holds anything but this layout (``data-*`` dirs,
+``_MANIFEST*`` and ``_manifest_log``) and has no manifest is not a
+FilesTable: opening it raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -78,7 +91,6 @@ FILES_SCHEMA = T.StructType(
 )
 
 PK = ["path", "filename"]
-_COLS = [f.name for f in FILES_SCHEMA.fields]
 BUCKET_COL = "pk_bucket"
 
 
@@ -111,7 +123,6 @@ class FilesTable:
 
     _MANIFEST = "_MANIFEST"
     _MANIFEST_LOG = "_manifest_log"
-    _BUCKET_MARKER = "_buckets"  # legacy pre-manifest layout only
     # only <generation>.json counts as a log entry — stray files
     # (editor temps, partial writes) must not break table maintenance
     _LOG_NAME = re.compile(r"^(\d+)\.json$")
@@ -143,7 +154,7 @@ class FilesTable:
             return None
 
     def _load_manifest(self) -> dict | None:
-        """Current manifest, or None for a legacy/absent layout.
+        """Current manifest, or None for a table never committed.
 
         The manifest-log entry is the COMMIT (atomically created via
         put-if-absent, :meth:`_commit_manifest`); ``_MANIFEST`` is a
@@ -175,16 +186,19 @@ class FilesTable:
             except FileNotFoundError:
                 continue  # pruned mid-read => a newer generation exists
 
+    @staticmethod
+    def _generation(manifest: dict | None) -> int:
+        return manifest.get("generation", 0) if manifest else 0
+
     def _current_generation(self) -> int:
-        m = self._load_manifest()
-        return m.get("generation", 0) if m else 0
+        return self._generation(self._load_manifest())
 
     @contextmanager
     def _operation(self, name: str):
         """Label the commits a public mutation makes (DESCRIBE HISTORY
-        parity). Outermost label wins: upsert's wide-touch fallback
-        calls overwrite(), and the history row should say UPSERT — what
-        the user asked for — not the physical strategy chosen."""
+        parity). Outermost label wins: a public operation that runs
+        inside another one's label is recorded as the outer one — what
+        the user asked for, not the physical step chosen."""
         prev = getattr(self, "_pending_op", None)
         self._pending_op = prev or name
         try:
@@ -262,12 +276,11 @@ class FilesTable:
     def _cols(self) -> list[str]:
         return [f.name for f in self.schema().fields]
 
-    def _conform(self, df: DataFrame, schema: T.StructType | None = None) -> DataFrame:
-        """Project ``df`` onto the (live) schema: present columns pass
-        through untouched, absent NULLABLE columns null-fill (so
-        pre-evolution writers keep working after an add_column), absent
-        non-nullable columns are an error."""
-        schema = schema or self.schema()
+    def _conform(self, df: DataFrame, schema: T.StructType) -> DataFrame:
+        """Project ``df`` onto ``schema`` (the writer's snapshot): present
+        columns pass through untouched, absent NULLABLE columns
+        null-fill (so pre-evolution writers keep working after an
+        add_column), absent non-nullable columns are an error."""
         cols = []
         for f in schema.fields:
             if f.name in df.columns:
@@ -291,7 +304,7 @@ class FilesTable:
         (w9) and, with history on, time-travel reads of PRE-evolution
         generations still present their original column set."""
         snapshot_doc = self._load_manifest()
-        snapshot = snapshot_doc.get("generation", 0) if snapshot_doc else 0
+        snapshot = self._generation(snapshot_doc)
         schema = self._schema_of(snapshot_doc)
         if name in {f.name for f in schema.fields}:
             raise ValueError(f"column {name!r} already exists at {self.location}")
@@ -335,7 +348,7 @@ class FilesTable:
         see :meth:`_load_manifest`."""
         os.makedirs(self.location, exist_ok=True)
         prev = self._load_manifest()
-        cur = prev.get("generation", 0) if prev else 0
+        cur = self._generation(prev)
         if expected_generation is not None and cur != expected_generation:
             raise ConcurrentWriteError(
                 f"table at {self.location} advanced to generation {cur} "
@@ -440,7 +453,7 @@ class FilesTable:
         generation was vacuumed are dropped too, so read_at() fails
         loudly instead of reading a half-deleted snapshot."""
         m = self._load_manifest()
-        if m is None or not os.path.isdir(self.location):
+        if m is None:
             return []
         keep = max(int(retain_generations), 1)
         current_gen = m.get("generation", 1)
@@ -487,29 +500,13 @@ class FilesTable:
         the logged manifest's immutable dirs (Delta/Iceberg snapshot
         semantics). Raises if the generation was never logged (history
         off, or commit predates keep_history) or was vacuumed away."""
-        log_path = os.path.join(
-            self.location, self._MANIFEST_LOG, f"{generation}.json"
-        )
-        try:
-            with open(log_path) as fh:
-                doc = json.load(fh)
-        except FileNotFoundError:
-            raise ValueError(
-                f"generation {generation} is not retained at {self.location} "
-                f"(retained: {self.generations()})"
-            ) from None
-        gen_schema = self._schema_of(doc)
-        gen_cols = [f.name for f in gen_schema.fields]
-        if not doc["entries"]:
-            return self._empty(gen_schema).select(*gen_cols)
+        doc = self._logged_manifest(generation)
         for rel in doc["entries"].values():
             if not os.path.isdir(os.path.join(self.location, rel.split("/", 1)[0])):
                 raise ValueError(
                     f"generation {generation}'s data was vacuumed from {self.location}"
                 )
-        return self._read_dirs(
-            sorted(doc["entries"].values()), gen_schema
-        ).select(*gen_cols)
+        return self._read_dirs(sorted(doc["entries"].values()), self._schema_of(doc))
 
     def _logged_manifest(self, generation: int) -> dict:
         log_path = os.path.join(
@@ -564,14 +561,8 @@ class FilesTable:
                         f"from {self.location}; change feed unavailable"
                     )
 
-        def side_df(entries: dict, keys: set) -> DataFrame:
-            rels = sorted(entries[k] for k in keys)
-            if not rels:
-                return self._empty(schema).select(*cols)
-            return self._read_dirs(rels, schema).select(*cols)
-
-        o = side_df(ea, changed & set(ea)).alias("o")
-        n = side_df(eb, changed & set(eb)).alias("n")
+        o = self._read_dirs(sorted(ea[k] for k in changed & set(ea)), schema).alias("o")
+        n = self._read_dirs(sorted(eb[k] for k in changed & set(eb)), schema).alias("n")
         cond = functools.reduce(
             operator.and_, [F.col(f"o.{k}") == F.col(f"n.{k}") for k in PK]
         )
@@ -674,21 +665,27 @@ class FilesTable:
 
     def _validate_layout(self) -> None:
         """The bucket count is part of the on-disk layout: the manifest
-        (or the legacy marker file) records it, and reopening with a
-        different value is rejected — a mismatched modulus would prune
-        the wrong partitions and silently duplicate or miss keys."""
+        records it, and reopening with a different value is rejected — a
+        mismatched modulus would prune the wrong partitions and silently
+        duplicate or miss keys. A location without a manifest is a
+        fresh table (any configuration is fine) only if it holds nothing
+        but crashed writers' staging dirs and manifest files; anything
+        else (say, a plain Parquet directory) would read as an empty
+        table, so it is rejected."""
         m = self._load_manifest()
-        if m is not None:
-            disk = m["buckets"]
-        else:
-            marker = os.path.join(self.location, self._BUCKET_MARKER)
-            if os.path.isfile(marker):
-                with open(marker) as fh:
-                    disk = int(fh.read().strip())
-            elif self.exists():
-                disk = None  # pre-existing unbucketed legacy layout
-            else:
-                return  # fresh table: any configuration is fine
+        if m is None:
+            names = os.listdir(self.location) if os.path.isdir(self.location) else []
+            foreign = sorted(
+                n for n in names
+                if not n.startswith(("data-", self._MANIFEST)) and n != self._MANIFEST_LOG
+            )
+            if foreign:
+                raise ValueError(
+                    f"{self.location} is not a FilesTable: it has no {self._MANIFEST} "
+                    f"but holds {foreign[:5]}"
+                )
+            return
+        disk = m["buckets"]
         if disk != self.buckets:
             raise ValueError(
                 f"table at {self.location} was written with buckets={disk}; "
@@ -701,55 +698,29 @@ class FilesTable:
     # -- read ---------------------------------------------------------
     def exists(self) -> bool:
         m = self._load_manifest()
-        if m is not None:
-            return bool(m["entries"])
-        if not os.path.isdir(self.location):
-            return False
-        for _, _, names in os.walk(self.location):
-            if any(n.endswith(".parquet") for n in names):
-                return True
-        return False
+        return bool(m and m["entries"])
 
-    def _empty(self, schema: T.StructType | None = None) -> DataFrame:
-        empty = self.spark.createDataFrame([], schema or self.schema())
-        return empty.withColumn(BUCKET_COL, F.lit(None).cast("int")) if self.buckets else empty
-
-    def _read_dirs(self, rels: list[str], schema: T.StructType | None = None) -> DataFrame:
+    def _read_dirs(self, rels: list[str], schema: T.StructType) -> DataFrame:
+        """The rows of the given data dirs under ``schema``: absent
+        columns (dirs written pre-evolution) null-fill."""
+        if not rels:
+            return self.spark.createDataFrame([], schema)
         paths = [os.path.join(self.location, r) for r in rels]
-        # absent columns (dirs written pre-evolution) null-fill
-        df = self.spark.read.schema(schema or self.schema()).parquet(*paths)
-        # the bucket is a pure function of path — recomputed, never
-        # parsed from directory names
-        return df.withColumn(BUCKET_COL, self._bucket_expr()) if self.buckets else df
-
-    def _read_raw(self) -> DataFrame:
-        """Table including the bucket column (bucketed layout)."""
-        m = self._load_manifest()
-        if m is not None:
-            if not m["entries"]:
-                return self._empty()
-            return self._read_dirs(sorted(m["entries"].values()))
-        if not self.exists():
-            return self._empty()
-        # legacy (pre-manifest) layout: always the fixed files schema
-        if self.buckets:
-            return self.spark.read.parquet(self.location).select(*_COLS, BUCKET_COL)
-        return self.spark.read.schema(FILES_SCHEMA).parquet(self.location)
+        return self.spark.read.schema(schema).parquet(*paths).select(
+            *[f.name for f in schema.fields]
+        )
 
     def _read_slice(self, touched: list[int]) -> DataFrame:
         """ONLY the touched buckets' dirs — manifest pruning; untouched
         buckets are never opened."""
         m = self._load_manifest()
-        cols = [f.name for f in self._schema_of(m).fields]
-        if m is not None:
-            rels = [m["entries"][str(b)] for b in touched if str(b) in m["entries"]]
-            return self._read_dirs(sorted(rels)).select(*cols) if rels else (
-                self._empty().select(*cols)
-            )
-        return self._read_raw().filter(F.col(BUCKET_COL).isin(touched)).select(*cols)
+        entries = m["entries"] if m else {}
+        rels = [entries[str(b)] for b in touched if str(b) in entries]
+        return self._read_dirs(sorted(rels), self._schema_of(m))
 
     def read(self) -> DataFrame:
-        return self._read_raw().select(*self._cols())
+        m = self._load_manifest()
+        return self._read_dirs(sorted(m["entries"].values()) if m else [], self._schema_of(m))
 
     def read_for_keys(self, keys: DataFrame) -> DataFrame:
         """w12: manifest-PRUNED key probe — the Spark answer to the
@@ -761,22 +732,18 @@ class FilesTable:
         slice. On a 100 TB / 4096-bucket table a point lookup opens
         one dir (~1/4096 of the data) instead of scanning the fact
         table — the same manifest pruning the write path uses, exposed
-        to reads. Falls back to a full-scan semi-join on unbucketed or
-        pre-manifest tables.
+        to reads. Falls back to a full-scan semi-join on unbucketed
+        tables.
 
         ``keys`` needs ``path`` (+ ``filename`` for full-PK probes;
         path-only probes match every file in the directory, the D4
         shape)."""
         probe_cols = [c for c in PK if c in keys.columns]
         probe = keys.select(*probe_cols).distinct()
-        if not (self.buckets and self._has_manifest()):
+        if not self.buckets:
             return self.read().join(F.broadcast(probe), probe_cols, "left_semi")
         touched = sorted(self._touched_buckets(probe))
-        return (
-            self._read_slice(touched)
-            .select(*self._cols())
-            .join(F.broadcast(probe), probe_cols, "left_semi")
-        )
+        return self._read_slice(touched).join(F.broadcast(probe), probe_cols, "left_semi")
 
     def point_lookup(self, path: str, filename: str) -> DataFrame:
         """Single-PK pruned read: opens exactly one bucket dir on a
@@ -787,7 +754,7 @@ class FilesTable:
         frame, no semi-join; the measured local floor is Spark's
         job-submission overhead, not the scan (PERFORMANCE.md w12)."""
         pred = (F.col("path") == path) & (F.col("filename") == filename)
-        if not (self.buckets and self._has_manifest()):
+        if not self.buckets:
             return self.read().filter(pred)
         bucket = (
             self.spark.range(1)
@@ -798,29 +765,48 @@ class FilesTable:
             )
             .first()["b"]
         )
-        return self._read_slice([bucket]).select(*self._cols()).filter(pred)
+        return self._read_slice([bucket]).filter(pred)
 
     # -- write --------------------------------------------------------
     def overwrite(self, df: DataFrame, expected_generation: int | None = None) -> None:
         """Full replace (S10): stage a complete new generation, commit
-        by manifest swap. ``expected_generation`` carries an outer
-        operation's read snapshot (w9); when absent, the snapshot is
-        taken here — either way a competing commit in the window makes
-        this raise :class:`ConcurrentWriteError` with the staging
-        rolled back."""
-        old = self._load_manifest()
-        if expected_generation is None:
-            expected_generation = old.get("generation", 0) if old else 0
+        by manifest swap. ``expected_generation`` carries an outer read
+        snapshot (w9): a table already past it, or a competing commit
+        while this one stages, raises :class:`ConcurrentWriteError`
+        with the staging rolled back."""
+        snap = self._load_manifest()
+        if expected_generation not in (None, self._generation(snap)):
+            raise ConcurrentWriteError(
+                f"table at {self.location} is past this writer's snapshot at "
+                f"generation {expected_generation}; retry on a fresh snapshot"
+            )
+        with self._operation("OVERWRITE"):
+            self._commit_rows(df, snap)
+
+    def _commit_rows(
+        self, rows: DataFrame, snap: dict | None, replaced: list[str] | None = None
+    ) -> None:
+        """The staging commit behind every data write: write ``rows`` to
+        one fresh staging dir, then commit it against the snapshot
+        ``snap`` (w9: the commit refuses if the generation moved).
+        ``replaced=None`` replaces the whole table; otherwise only the
+        ``replaced`` bucket entries are remapped (a bucket with no
+        surviving rows drops out) and every other bucket keeps its
+        immutable dir — never read, never written."""
+        expected = self._generation(snap)
+        old = snap["entries"] if snap else {}
+        replaced = set(old) if replaced is None else set(replaced)
+        writer = self._conform(rows, self._schema_of(snap))
         staging = self._staging_dir()
-        writer = self._conform(df)
         try:
             if self.buckets:
                 writer = writer.withColumn(BUCKET_COL, self._bucket_expr())
                 writer.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
             else:
                 writer.write.mode("overwrite").parquet(staging)
-            with self._operation("OVERWRITE"):
-                self._commit_manifest(self._entries_from_staging(staging), expected_generation)
+            entries = {k: rel for k, rel in old.items() if k not in replaced}
+            entries.update(self._entries_from_staging(staging))
+            self._commit_manifest(entries, expected)
         except ConcurrentWriteError:
             shutil.rmtree(staging, ignore_errors=True)
             raise
@@ -831,18 +817,15 @@ class FilesTable:
             # conflict signal, not a raw FILE_NOT_EXIST. Non-conflict
             # failures (crash-like) keep their staging for vacuum(),
             # the documented orphan-reclamation path.
-            if self._current_generation() != expected_generation:
+            if self._current_generation() != expected:
                 shutil.rmtree(staging, ignore_errors=True)
                 raise ConcurrentWriteError(
                     f"table at {self.location} advanced past this writer's "
-                    f"snapshot at generation {expected_generation} during "
+                    f"snapshot at generation {expected} during "
                     "staging; retry on a fresh snapshot"
                 ) from exc
             raise
-        if old is not None:
-            self._gc(sorted(set(old["entries"].values())))
-        else:
-            self._gc_legacy()
+        self._gc(sorted(old[k] for k in replaced if k in old))
 
     def compact(self, files_per_bucket: int = 1, min_files: int = 2) -> list[str]:
         """OPTIMIZE: rewrite fragmented data dirs into ``files_per_bucket``
@@ -862,7 +845,7 @@ class FilesTable:
         m = self._load_manifest()
         if m is None or not m["entries"]:
             return []
-        snapshot = m.get("generation", 0)
+        snapshot = self._generation(m)
         entries = dict(m["entries"])
         dead, rewritten = [], []
         for key, rel in sorted(m["entries"].items()):
@@ -888,65 +871,6 @@ class FilesTable:
         self._gc(dead)
         return rewritten
 
-    def _gc_legacy(self) -> None:
-        """First manifest commit over a legacy layout: drop the old
-        root-level parquet files/dirs the manifest doesn't know."""
-        for name in os.listdir(self.location):
-            if name in (self._MANIFEST, self._MANIFEST_LOG) or name.startswith("data-"):
-                continue
-            full = os.path.join(self.location, name)
-            if os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
-            elif not name.startswith(f"{self._MANIFEST}.tmp"):
-                os.remove(full)
-
-    def _commit_buckets(
-        self,
-        out: DataFrame,
-        touched: list[int],
-        expected_generation: int | None = None,
-    ) -> None:
-        """Stage new dirs for ONLY the touched buckets, then commit a
-        manifest that remaps those buckets (a touched bucket with no
-        surviving rows simply drops out). Untouched buckets keep their
-        existing immutable dirs — never read, never written. The w9
-        conflict check runs against the outer operation's snapshot."""
-        old = self._load_manifest()
-        assert old is not None, "bucketed commit requires a manifest table"
-        if expected_generation is None:
-            expected_generation = old.get("generation", 0)
-        staging = self._staging_dir()
-        try:
-            out.withColumn(BUCKET_COL, self._bucket_expr()).write.mode(
-                "overwrite"
-            ).partitionBy(BUCKET_COL).parquet(staging)
-            fresh = self._entries_from_staging(staging)
-            entries = dict(old["entries"])
-            dead = []
-            for b in touched:
-                key = str(b)
-                if key in entries:
-                    dead.append(entries.pop(key))
-                if key in fresh:
-                    entries[key] = fresh[key]
-            self._commit_manifest(entries, expected_generation)
-        except ConcurrentWriteError:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        except Exception as exc:
-            # see overwrite(): a competing commit can GC the dirs this
-            # staging write is lazily reading; non-conflict failures
-            # keep their staging for vacuum()
-            if self._current_generation() != expected_generation:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise ConcurrentWriteError(
-                    f"table at {self.location} advanced past this writer's "
-                    f"snapshot at generation {expected_generation} during "
-                    "staging; retry on a fresh snapshot"
-                ) from exc
-            raise
-        self._gc(dead)
-
     def _touched_buckets(self, keys: DataFrame) -> list[int]:
         rows = keys.select(self._bucket_expr().alias("b")).distinct().collect()
         return [r["b"] for r in rows]
@@ -961,80 +885,50 @@ class FilesTable:
     def _wide(self, touched: list[int]) -> bool:
         return self.buckets is not None and len(touched) >= self.buckets * self._WIDE_TOUCH_FRACTION
 
-    def _has_manifest(self) -> bool:
-        return self._load_manifest() is not None
+    def _merge(
+        self, keys: DataFrame, on: list[str], label: str, rows: DataFrame | None = None
+    ) -> None:
+        """The one MERGE behind upsert, delete and delete_paths: drop
+        the rows whose ``on`` columns match ``keys`` (left anti-join),
+        add ``rows`` when given, and commit under ``label``.
+
+        One manifest snapshot, taken before any read, gives the
+        generation the commit checks (w9: a commit by another writer
+        in between raises :class:`ConcurrentWriteError`), the existence
+        check, the schema and the entries the commit remaps. Bucketed:
+        only the buckets the keys hash to are read and rewritten,
+        unless the touch is wide; then, and on unbucketed tables, the
+        whole table is rewritten."""
+        snap = self._load_manifest()
+        live = bool(snap and snap["entries"])
+        if rows is None and not live:
+            return  # nothing to delete from
+        pruned = bool(self.buckets) and live
+        touched = self._touched_buckets(keys) if pruned else []
+        with self._operation(label):
+            if pruned and not self._wide(touched):
+                current, replaced = self._read_slice(touched), [str(b) for b in touched]
+            else:
+                current, replaced = self.read(), None
+            out = current.join(keys.select(*on), on, "left_anti")
+            if rows is not None:
+                out = out.unionByName(self._conform(rows, self._schema_of(snap)))
+            self._commit_rows(out, snap, replaced)
 
     def upsert(self, updates: DataFrame) -> None:
-        """MERGE: update matched PKs, insert the rest (S7/S8).
-
-        Bucketed: touches only the buckets the update keys hash to.
-        The manifest generation is snapshotted HERE, before any read —
-        a commit by another writer between this read and our commit
-        raises :class:`ConcurrentWriteError` (w9).
-        """
-        snapshot = self._current_generation()
-        bucketed = bool(self.buckets) and self.exists() and self._has_manifest()
-        touched = self._touched_buckets(updates) if bucketed else []
-        with self._operation("UPSERT"):
-            if not bucketed or self._wide(touched):
-                current = self.read()
-                kept = current.join(updates.select(*PK), PK, "left_anti")
-                self.overwrite(kept.unionByName(self._conform(updates)), snapshot)
-                return
-            slice_df = self._read_slice(touched)
-            kept = slice_df.join(updates.select(*PK), PK, "left_anti")
-            self._commit_buckets(kept.unionByName(self._conform(updates)), touched, snapshot)
+        """MERGE: update matched PKs, insert the rest (S7/S8)."""
+        self._merge(updates, PK, "UPSERT", rows=updates)
 
     def delete(self, keys: DataFrame) -> None:
-        """MERGE ... WHEN MATCHED DELETE (S9): anti-join rewrite of the
-        touched buckets only (bucketed) or the table (plain). Snapshot
-        + conflict-detected commit, like upsert."""
-        if not self.exists():
-            return
-        snapshot = self._current_generation()
-        bucketed = bool(self.buckets) and self._has_manifest()
-        touched = self._touched_buckets(keys) if bucketed else []
-        with self._operation("DELETE"):
-            if not bucketed or self._wide(touched):
-                current = self.read()
-                self.overwrite(
-                    current.join(keys.select(*PK).distinct(), PK, "left_anti"), snapshot
-                )
-                return
-            self._commit_buckets(
-                self._read_slice(touched).join(
-                    keys.select(*PK).distinct(), PK, "left_anti"
-                ),
-                touched,
-                snapshot,
-            )
+        """MERGE ... WHEN MATCHED DELETE (S9): drop the rows whose PK
+        is in ``keys``."""
+        self._merge(keys, PK, "DELETE")
 
     def delete_paths(self, paths: DataFrame) -> None:
-        """Directory-level delete (reference indexer.py:1762-1787) —
-        prunable because bucketing hashes ``path`` only. Snapshot +
-        conflict-detected commit, like upsert."""
-        if not self.exists():
-            return
-        snapshot = self._current_generation()
-        bucketed = bool(self.buckets) and self._has_manifest()
-        touched = self._touched_buckets(paths) if bucketed else []
-        with self._operation("DELETE_PATHS"):
-            if not bucketed or self._wide(touched):
-                current = self.read()
-                self.overwrite(
-                    current.join(
-                        paths.select("path").distinct(), ["path"], "left_anti"
-                    ),
-                    snapshot,
-                )
-                return
-            self._commit_buckets(
-                self._read_slice(touched).join(
-                    paths.select("path").distinct(), ["path"], "left_anti"
-                ),
-                touched,
-                snapshot,
-            )
+        """Directory-level delete (reference indexer.py:1762-1787): drop
+        every row whose ``path`` is in ``paths`` — prunable because
+        bucketing hashes ``path`` only."""
+        self._merge(paths, ["path"], "DELETE_PATHS")
 
     # -- JSON interchange (S11, reference indexer.go:294-338) ----------
     # default JSON timestamps are millisecond-precision; stat() mtimes

@@ -2,24 +2,20 @@
 file_indexer_go/db/database.go:47-50; written at indexer.go:72-77,
 read at db/database.go:219-231).
 
-Two columns (key, value), a handful of rows (root_path, indexed
-timestamp, schema version) — stored as a single-partition parquet
-alongside the files table. Deliberately tiny: reads collect to a dict.
+A handful of key/value rows (root_path, indexed timestamp, schema
+version), stored as one JSON object in the file at ``location``. A
+write goes to a unique temp file, is fsync'ed and then ``os.replace``d
+into place: readers see the old object or the new one, never neither,
+and the write needs no Spark job.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import uuid
 
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
-
-META_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.StringType(), False),
-        T.StructField("value", T.StringType(), True),
-    ]
-)
 
 KEY_ROOT_PATH = "root_path"
 KEY_INDEXED_AT = "indexed"
@@ -27,35 +23,31 @@ KEY_INDEXED_AT = "indexed"
 
 class IndexMetadata:
     def __init__(self, spark: SparkSession, location: str):
-        self.spark = spark
+        """``spark`` is kept in the signature for callers; the store
+        itself is a local file and runs no Spark job."""
         self.location = os.path.abspath(location)
 
     def read_all(self) -> dict[str, str]:
-        if not os.path.isdir(self.location):
+        try:
+            with open(self.location) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
             return {}
-        rows = self.spark.read.schema(META_SCHEMA).parquet(self.location).collect()
-        return {r["key"]: r["value"] for r in rows}
 
     def get(self, key: str) -> str | None:
         return self.read_all().get(key)
 
     def set_many(self, items: dict[str, str]) -> None:
-        """Unique-tmp + move-aside swap (the single-file analogue of
-        FilesTable's manifest commit): the live copy is never deleted
-        before its replacement is in place, and concurrent writers
-        don't share a tmp path."""
-        import shutil
-        import uuid
-
+        """Merge ``items`` into the stored object by an atomic swap: a
+        concurrent writer's last replace wins whole."""
         merged = {**self.read_all(), **items}
-        df = self.spark.createDataFrame(sorted(merged.items()), META_SCHEMA)
+        os.makedirs(os.path.dirname(self.location), exist_ok=True)
         tmp = f"{self.location}.tmp-{uuid.uuid4().hex[:8]}"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = f"{self.location}.old-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.location):
-            os.rename(self.location, old)
-        os.rename(tmp, self.location)
-        shutil.rmtree(old, ignore_errors=True)
+        with open(tmp, "w") as fh:
+            json.dump(merged, fh, sort_keys=True)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, self.location)
 
     def set(self, key: str, value: str) -> None:
         self.set_many({key: value})

@@ -175,6 +175,28 @@ def test_index_metadata_roundtrip(spark, tree, tmp_path, capsys):
     assert m.get("missing") is None
 
 
+def test_index_metadata_write_never_hides_old_contents(spark, tmp_path, monkeypatch):
+    """A reader in the middle of a metadata write sees the old contents,
+    never an empty store: the swap is one atomic replace."""
+    from file_indexer_spark.indexer import metadata
+
+    m = metadata.IndexMetadata(spark, str(tmp_path / "meta"))
+    m.set_many({"a": "1", "b": "2"})
+    seen = []
+    for name in ("rename", "replace"):
+        real = getattr(metadata.os, name)
+
+        def spy(src, dst, _real=real):
+            seen.append(m.read_all())
+            return _real(src, dst)
+
+        monkeypatch.setattr(metadata.os, name, spy)
+    m.set("a", "3")
+    monkeypatch.undo()
+    assert seen and all(s == {"a": "1", "b": "2"} for s in seen), seen
+    assert m.read_all() == {"a": "3", "b": "2"}
+
+
 def test_service_contracts(spark, sf_smoke):
     """API-service layer (reference api_backend/tests/test_api.py
     :196-260 pagination math, :288-316 validation bounds)."""

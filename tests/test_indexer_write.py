@@ -443,34 +443,24 @@ def test_bucketed_upsert_rewrites_only_touched_partitions(spark, bucketed):
     assert got[("/dir0", "f0")] == ("c00", 0)
 
 
-def test_legacy_layout_reads_and_migrates_to_manifest(spark, tmp_path):
-    """Pre-manifest tables (parquet at the table root, no _MANIFEST)
-    must read as-is, and the first write must migrate them to the
-    manifest layout — removing the legacy root files it replaced."""
-    loc = str(tmp_path / "legacy_db")
+def test_plain_parquet_location_is_rejected(spark, tmp_path):
+    """A location that holds data but no manifest is not a FilesTable:
+    opening it raises instead of reading as an empty table. A location
+    holding only what a crashed first commit leaves behind (staging
+    dirs, manifest temps, the log dir) is still a fresh table."""
+    loc = str(tmp_path / "plain_parquet")
     rows = _mk_rows(spark, [(f"/p{i}", "f", f"c{i}", i) for i in range(6)])
-    rows.write.parquet(loc)  # legacy: data directly at the root
+    rows.write.parquet(loc)  # data directly at the root, no _MANIFEST
     assert not os.path.exists(os.path.join(loc, "_MANIFEST"))
+    with pytest.raises(ValueError, match="not a FilesTable"):
+        FilesTable(spark, loc)
 
-    table = FilesTable(spark, loc)
-    got = {r["path"]: r["checksum"] for r in table.read().collect()}
-    assert got == {f"/p{i}": f"c{i}" for i in range(6)}
-
-    table.upsert(_mk_rows(spark, [("/p1", "f", "NEW", 9), ("/p9", "f", "ins", 9)]))
-    assert os.path.exists(os.path.join(loc, "_MANIFEST"))
-    got = {r["path"]: r["checksum"] for r in table.read().collect()}
-    assert got["/p1"] == "NEW" and got["/p9"] == "ins" and len(got) == 7
-    # legacy root parquet files replaced by manifest-managed data dirs
-    # (+ the arbiter log every manifest table now carries)
-    stray = [
-        n for n in os.listdir(loc)
-        if not (
-            n.startswith("data-")
-            or n in (FilesTable._MANIFEST, FilesTable._MANIFEST_LOG)
-        )
-    ]
-    assert stray == [], stray
-    assert table.vacuum() == []
+    crashed = tmp_path / "crashed_first_commit"
+    (crashed / "data-0badc0de").mkdir(parents=True)
+    (crashed / FilesTable._MANIFEST_LOG).mkdir()
+    (crashed / f"{FilesTable._MANIFEST}.tmp-1234").write_text("")
+    t = FilesTable(spark, str(crashed), buckets=4)
+    assert not t.exists() and t.read().count() == 0
 
 
 def test_crash_mid_commit_leaves_consistent_table(spark, bucketed, monkeypatch):
@@ -565,6 +555,68 @@ def test_bucketed_delete_and_delete_paths(spark, bucketed):
     bucketed.delete_paths(_mk_rows(spark, [("/dir2", "x", None, 0)]))
     got = {(r["path"], r["filename"]) for r in bucketed.read().collect()}
     assert len(got) == 7 and ("/dir2", "f0") not in got
+
+
+@pytest.mark.parametrize("buckets", [None, 4])
+@pytest.mark.parametrize("touch", ["clustered", "wide"])
+@pytest.mark.parametrize("op", ["upsert", "delete", "delete_paths"])
+def test_merge_path_matches_model(spark, tmp_path, monkeypatch, buckets, touch, op):
+    """upsert, delete and delete_paths are one merge. On both layouts
+    and both touch widths: the rows equal a Python model, the history
+    row carries the public operation's label, the operation resolves
+    the manifest at most 3 times (snapshot, read, commit check), and a
+    clustered bucketed merge remaps only the touched bucket's entry."""
+    t = FilesTable(spark, str(tmp_path / "merge_db"), buckets=buckets)
+    model = {(f"/m{i}", f"f{j}"): (f"c{i}{j}", i + j) for i in range(16) for j in range(2)}
+    t.overwrite(_mk_rows(spark, [(p, f, c, s) for (p, f), (c, s) in model.items()]))
+    paths = ["/m3"] if touch == "clustered" else [f"/m{i}" for i in range(12)]
+    if op == "upsert":
+        new = {(p, f): ("NEW", 99) for p in paths for f in ("f0", "fX")}
+        arg = _mk_rows(spark, [(p, f, c, s) for (p, f), (c, s) in new.items()])
+        model.update(new)
+    elif op == "delete":
+        arg = _mk_rows(spark, [(p, "f0", None, 0) for p in paths]).select("path", "filename")
+        model = {k: v for k, v in model.items() if not (k[0] in paths and k[1] == "f0")}
+    else:
+        arg = spark.createDataFrame([(p,) for p in paths], "path string")
+        model = {k: v for k, v in model.items() if k[0] not in paths}
+    touched = t._touched_buckets(arg) if buckets else []
+    if buckets:
+        assert len(touched) == (1 if touch == "clustered" else buckets)
+    before = t._load_manifest()["entries"]
+
+    resolutions = []
+    load = t._load_manifest
+    monkeypatch.setattr(t, "_load_manifest", lambda: resolutions.append(1) or load())
+    getattr(t, op)(arg)
+    monkeypatch.undo()
+    assert len(resolutions) <= 3, len(resolutions)
+
+    got = {
+        (r["path"], r["filename"]): (r["checksum"], r["file_size"])
+        for r in t.read().collect()
+    }
+    assert got == model
+    assert t.history().orderBy(F.desc("generation")).first()["operation"] == op.upper()
+    if buckets and touch == "clustered":
+        after = t._load_manifest()["entries"]
+        moved = {k for k in set(before) | set(after) if before.get(k) != after.get(k)}
+        assert moved == {str(touched[0])}
+
+
+@pytest.mark.parametrize("buckets", [None, 4])
+def test_frame_resolved_before_commit_raises_not_partial(spark, tmp_path, buckets):
+    """The module's concurrency contract: a no-history commit deletes
+    the dirs it replaced, so a DataFrame resolved before the commit
+    raises when it runs — never returns the rows of the surviving dirs
+    only. Bucketed, the upsert is clustered: one bucket dir of four
+    goes away."""
+    t = FilesTable(spark, str(tmp_path / "stale_frame"), buckets=buckets)
+    t.overwrite(_mk_rows(spark, [(f"/s{i}", "f", "c", i) for i in range(16)]))
+    df = t.read()
+    t.upsert(_mk_rows(spark, [("/s3", "f", "NEW", 99)]))
+    with pytest.raises(Exception, match="FILE_NOT_EXIST"):
+        df.collect()
 
 
 def test_scan_wide_tree_distributed(spark, tmp_path):
@@ -978,6 +1030,25 @@ def test_stale_cache_resolves_to_logged_commit(spark, tmp_path):
     assert t._read_manifest_cache()["generation"] == gen + 2
     # no-history pruning keeps exactly the latest arbiter entry
     assert [g for g, _ in t._log_generations()] == [gen + 2]
+
+
+def test_overwrite_refuses_a_stale_expected_generation(spark, tmp_path):
+    """w9 for a caller that passes its own read snapshot: once the table
+    moved past ``expected_generation``, overwrite raises and leaves no
+    staging behind; at the current generation it commits."""
+    from file_indexer_spark.indexer.files_table import ConcurrentWriteError
+
+    t = FilesTable(spark, str(tmp_path / "stale_overwrite"))
+    t.overwrite(_w9_rows(spark, ["a.txt"]))
+    gen = t._current_generation()
+    t.upsert(_w9_rows(spark, ["b.txt"]))
+    names = sorted(os.listdir(t.location))
+    with pytest.raises(ConcurrentWriteError, match="generation"):
+        t.overwrite(_w9_rows(spark, ["c.txt"]), expected_generation=gen)
+    assert sorted(os.listdir(t.location)) == names
+    assert {r["filename"] for r in t.read().collect()} == {"a.txt", "b.txt"}
+    t.overwrite(_w9_rows(spark, ["c.txt"]), expected_generation=gen + 1)
+    assert {r["filename"] for r in t.read().collect()} == {"c.txt"}
 
 
 # ------------------------------------------------- schema evolution (w11)
