@@ -45,23 +45,32 @@ def scope_to_pattern(
     max_file_size: int | None = None,
 ) -> DataFrame:
     """J3 scoping (database.py:225-292): find the checksums of files
-    MATCHING the pattern, then return ALL copies of those checksums —
-    even copies that don't match. No pattern => plain non-null-checksum
-    scope. Shared by the grouped query and the serving layer."""
+    MATCHING the pattern (and size bounds), then return ALL copies of
+    those checksums — even copies that don't match. No pattern => plain
+    non-null-checksum scope within the size bounds. Shared by the
+    grouped query and the serving layer.
+
+    The reference's IN-subquery is a window flag per checksum here: it
+    needs only a clustering on ``checksum``, which the grouping on
+    (checksum, file_size) that follows reuses, and which a
+    one-partition input already has — so no join and no broadcast."""
     base = files.filter(F.col("checksum").isNotNull())
+    match = F.lit(True)
     if min_file_size is not None:
-        base = base.filter(F.col("file_size") >= min_file_size)
+        match &= F.col("file_size") >= min_file_size
     if max_file_size is not None:
-        base = base.filter(F.col("file_size") <= max_file_size)
+        match &= F.col("file_size") <= max_file_size
     if filename_pattern is None and path_pattern is None:
-        return base
-    matching = base
+        return base.filter(match)
     if filename_pattern is not None:
-        matching = matching.filter(F.col("filename").like(filename_pattern))
+        match &= F.col("filename").like(filename_pattern)
     if path_pattern is not None:
-        matching = matching.filter(F.col("path").like(path_pattern))
-    target = matching.select("checksum").distinct()
-    return files.filter(F.col("checksum").isNotNull()).join(target, "checksum", "left_semi")
+        match &= F.col("path").like(path_pattern)
+    return (
+        base.withColumn("_scoped", F.bool_or(match).over(Window.partitionBy("checksum")))
+        .filter("_scoped")
+        .drop("_scoped")
+    )
 
 
 def duplicate_groups(
@@ -123,12 +132,13 @@ def duplicate_groups(
     )
 
 
-def duplicate_groups_nested(files: DataFrame, min_group_size: int = 2) -> DataFrame:
+def group_duplicates(files: DataFrame, min_group_size: int = 2) -> DataFrame:
     """DuplicateGroup rows with a nested files array (reference A12:
     Python dict-of-lists assembly at database.py:347-379 →
     ``collect_list(struct(...))``, sorted for determinism) plus the
     wasted_space metric (A13, database.py:357-359:
-    file_size * (file_count - 1))."""
+    file_size * (file_count - 1)), unordered: the aggregate half of
+    :func:`duplicate_groups_nested`."""
     return (
         files.filter(F.col("checksum").isNotNull())
         .groupBy("checksum", "file_size")
@@ -138,8 +148,18 @@ def duplicate_groups_nested(files: DataFrame, min_group_size: int = 2) -> DataFr
         )
         .filter(F.col("file_count") >= min_group_size)
         .withColumn("wasted_space", F.col("file_size") * (F.col("file_count") - 1))
-        .orderBy(F.desc("file_count"), F.desc("file_size"), "checksum")
     )
+
+
+def group_order() -> list:
+    """The ordering half: largest groups first, then the biggest files,
+    ``checksum`` as the tie-break (a total order, so pages are stable)."""
+    return [F.desc("file_count"), F.desc("file_size"), "checksum"]
+
+
+def duplicate_groups_nested(files: DataFrame, min_group_size: int = 2) -> DataFrame:
+    """:func:`group_duplicates` ordered by :func:`group_order`."""
+    return group_duplicates(files, min_group_size).orderBy(*group_order())
 
 
 def duplicates_report(files: DataFrame) -> DataFrame:

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def search_files(
+def search_matches(
     files: DataFrame,
     filename_pattern: str | None = None,
     path_pattern: str | None = None,
@@ -27,17 +27,10 @@ def search_files(
     max_file_size: int | None = None,
     modified_after: datetime | str | None = None,
     modified_before: datetime | str | None = None,
-    order_by_recency: bool = False,
-    limit: int | None = None,
-    offset: int = 0,
 ) -> DataFrame:
-    """All search dimensions of the reference, AND-combined.
-
-    Ordering: ``path, filename`` (reference indexer.py:737) or, for the
-    API's recency-ranked page, ``modification_datetime DESC, path,
-    filename`` (database.py:118-128) — both total orders, so LIMIT/
-    OFFSET pages are deterministic.
-    """
+    """All search dimensions of the reference, AND-combined, unordered:
+    the predicate half of :func:`search_files`, for callers that count
+    the matches in the same pass that orders and pages them."""
     out = files
     if filename_pattern is not None:
         out = out.filter(F.col("filename").like(filename_pattern))
@@ -57,11 +50,45 @@ def search_files(
         out = out.filter(F.col("modification_datetime") >= F.lit(modified_after))
     if modified_before is not None:
         out = out.filter(F.col("modification_datetime") <= F.lit(modified_before))
+    return out
 
-    if order_by_recency:
-        out = out.orderBy(F.desc("modification_datetime"), "path", "filename")
-    else:
-        out = out.orderBy("path", "filename")
+
+def search_order(order_by_recency: bool = False) -> list:
+    """The ordering half: ``path, filename`` (reference indexer.py:737)
+    or, for the API's recency-ranked page, ``modification_datetime DESC,
+    path, filename`` (database.py:118-128) — both total orders, so
+    LIMIT/OFFSET pages are deterministic."""
+    keys = ["path", "filename"]
+    return [F.desc("modification_datetime"), *keys] if order_by_recency else keys
+
+
+def search_files(
+    files: DataFrame,
+    filename_pattern: str | None = None,
+    path_pattern: str | None = None,
+    checksum: str | None = None,
+    has_checksum: bool | None = None,
+    min_file_size: int | None = None,
+    max_file_size: int | None = None,
+    modified_after: datetime | str | None = None,
+    modified_before: datetime | str | None = None,
+    order_by_recency: bool = False,
+    limit: int | None = None,
+    offset: int = 0,
+) -> DataFrame:
+    """:func:`search_matches` ordered by :func:`search_order`, then
+    sliced to ``offset``/``limit``."""
+    out = search_matches(
+        files,
+        filename_pattern,
+        path_pattern,
+        checksum,
+        has_checksum,
+        min_file_size,
+        max_file_size,
+        modified_after,
+        modified_before,
+    ).orderBy(*search_order(order_by_recency))
     if offset:
         out = out.offset(offset)
     if limit is not None:

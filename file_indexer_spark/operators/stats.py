@@ -20,36 +20,63 @@ from file_indexer_spark.tables import FIXED_NOW
 
 
 def database_stats(files: DataFrame) -> DataFrame:
-    """The 12-aggregate DatabaseStats row (reference database.py:395-457,
+    """The 13-field DatabaseStats row (reference database.py:395-457,
     models.py:113-127; also indexer.py get_stats :847-913).
 
-    One job: a single agg computes A1-A6; the duplicate pair (A8) needs
-    its own groupBy, joined back via crossJoin of two 1-row frames.
+    One aggregate per ``checksum`` (the NULL-checksum files are one more
+    group) gives every field but ``unique_directories``: the totals and
+    extremes roll up from the groups, ``unique_checksums`` counts the
+    non-NULL keys and the duplicate pair (A8) counts the groups of more
+    than one file. The distinct-``path`` count is the second one-row
+    frame, cross-joined. Two ``COUNT(DISTINCT)`` in one aggregate would
+    plan an Expand, which discards the input's partitioning and so adds
+    a shuffle even over a one-partition snapshot; this plan has none
+    there, and runs as two jobs (the cross join broadcasts one row).
     """
-    basic = files.agg(
-        F.count("*").alias("total_files"),
-        F.coalesce(F.sum("file_size"), F.lit(0)).cast("long").alias("total_size"),
-        F.count("checksum").alias("files_with_checksums"),
-        (F.count("*") - F.count("checksum")).alias("files_without_checksums"),
-        F.avg("file_size").alias("average_file_size"),
-        F.max("file_size").alias("largest_file_size"),
-        F.min("file_size").alias("smallest_file_size"),
-        F.max("modification_datetime").alias("most_recent_modification"),
-        F.min("modification_datetime").alias("oldest_modification"),
-        F.countDistinct("path").alias("unique_directories"),
-        F.countDistinct("checksum").alias("unique_checksums"),
+    per_checksum = files.groupBy("checksum").agg(
+        F.count("*").alias("n"),
+        F.sum("file_size").alias("size"),
+        F.count("file_size").alias("sized"),
+        F.max("file_size").alias("largest"),
+        F.min("file_size").alias("smallest"),
+        F.max("modification_datetime").alias("newest"),
+        F.min("modification_datetime").alias("oldest"),
     )
-    dup = (
-        files.filter(F.col("checksum").isNotNull())
-        .groupBy("checksum")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > 1)
-        .agg(
-            F.coalesce(F.count("*"), F.lit(0)).alias("duplicate_groups"),
-            F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("duplicate_files"),
-        )
+    hashed = F.col("checksum").isNotNull()
+    duplicated = hashed & (F.col("n") > 1)
+    total = F.coalesce(F.sum("n"), F.lit(0))
+    with_checksum = F.coalesce(F.sum(F.when(hashed, F.col("n"))), F.lit(0))
+    basic = per_checksum.agg(
+        total.alias("total_files"),
+        F.coalesce(F.sum("size"), F.lit(0)).alias("total_size"),
+        with_checksum.alias("files_with_checksums"),
+        (total - with_checksum).alias("files_without_checksums"),
+        # NULL exactly when no file has a size, so never 0 / 0
+        (F.sum("size") / F.sum("sized")).alias("average_file_size"),
+        F.max("largest").alias("largest_file_size"),
+        F.min("smallest").alias("smallest_file_size"),
+        F.max("newest").alias("most_recent_modification"),
+        F.min("oldest").alias("oldest_modification"),
+        F.count("checksum").alias("unique_checksums"),
+        F.count(F.when(duplicated, 1)).alias("duplicate_groups"),
+        F.coalesce(F.sum(F.when(duplicated, F.col("n"))), F.lit(0)).alias("duplicate_files"),
     )
-    return basic.crossJoin(dup)
+    directories = files.agg(F.countDistinct("path").alias("unique_directories"))
+    return basic.crossJoin(directories).select(
+        "total_files",
+        "total_size",
+        "files_with_checksums",
+        "files_without_checksums",
+        "average_file_size",
+        "largest_file_size",
+        "smallest_file_size",
+        "most_recent_modification",
+        "oldest_modification",
+        "unique_directories",
+        "unique_checksums",
+        "duplicate_groups",
+        "duplicate_files",
+    )
 
 
 def size_histogram(files: DataFrame) -> DataFrame:

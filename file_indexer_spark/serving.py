@@ -2,16 +2,40 @@
 api_backend/file_indexer_api/routers.py:74,132-134).
 
 The API backend serves (page, total_count, has_more) triples; here the
-same contract over any ordered DataFrame. ``total_count`` costs one
-aggregate job (cache the source if serving interactively); the page
-itself is a TakeOrderedAndProject — no full materialization.
+same contract over any DataFrame, ordered by the caller's keys. The
+page and its totals come from one action: the totals are observed
+(``DataFrame.observe``) on the unordered rows the page is cut from, so
+``total_count`` costs no job of its own, and the page itself is a
+TakeOrderedAndProject — no full materialization.
+
+``FileIndexService`` serves every request from its own cached copy of
+the snapshot, coalesced to the partitions a scan of it would read: one
+up to ``spark.sql.files.maxPartitionBytes`` (128 MB by default). On one
+partition the planner needs no exchange for any aggregate, so a search,
+duplicates or visualization request is one Spark job and a stats
+request two.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
+
+from file_indexer_spark.operators.duplicates import group_duplicates, group_order, scope_to_pattern
+from file_indexer_spark.operators.search import search_matches, search_order
+from file_indexer_spark.operators.stats import (
+    database_stats,
+    extension_stats,
+    modification_timeline,
+    size_histogram,
+)
+
+# ``coalesce`` to more partitions than a frame has keeps the ones it
+# has; see ``observed_page`` for why the page query wants that no-op.
+_KEEP_PARTITIONS = 2**31 - 1
 
 
 @dataclass
@@ -23,13 +47,34 @@ class Page:
     has_more: bool
 
 
-def paginate(df: DataFrame, order_by: list[str], limit: int, offset: int = 0) -> Page:
-    """Stable page + has_more flag (offset + len(page) < total)."""
-    total = df.count()
-    page_df = df.orderBy(*order_by)
+def observed_page(
+    df: DataFrame, order_by: list, limit: int, offset: int = 0, **totals: Column
+) -> tuple[DataFrame, Observation]:
+    """The page query and the observation that holds ``totals``
+    (aggregates over all of ``df``) once the page has been collected.
+
+    The observation sits below the page's sort, and a no-op coalesce
+    between them hides any ordering ``df`` already has: over an input
+    sorted on the page keys the top-K would otherwise read only
+    ``offset + limit`` rows and the totals would count just those."""
+    if limit < 1 or offset < 0:
+        raise ValueError("limit must be >= 1 and offset >= 0")
+    obs = Observation()
+    page = (
+        df.observe(obs, *(agg.alias(name) for name, agg in totals.items()))
+        .coalesce(_KEEP_PARTITIONS)
+        .orderBy(*order_by)
+    )
     if offset:
-        page_df = page_df.offset(offset)
-    rows = page_df.limit(limit).collect()
+        page = page.offset(offset)
+    return page.limit(limit), obs
+
+
+def paginate(df: DataFrame, order_by: list, limit: int, offset: int = 0) -> Page:
+    """Stable page + has_more flag (offset + len(page) < total), one job."""
+    page, obs = observed_page(df, order_by, limit, offset, total_count=F.count(F.lit(1)))
+    rows = page.collect()
+    total = obs.get["total_count"]
     return Page(
         rows=rows,
         total_count=total,
@@ -37,6 +82,22 @@ def paginate(df: DataFrame, order_by: list[str], limit: int, offset: int = 0) ->
         offset=offset,
         has_more=offset + len(rows) < total,
     )
+
+
+def _snapshot(files: DataFrame) -> DataFrame:
+    """``files`` coalesced to ``min(its partitions, ceil(plan size /
+    spark.sql.files.maxPartitionBytes))``: the partitions a scan of it
+    would be split into, never more than it has. A frame without file
+    statistics reports Long.MaxValue bytes, so the cap is what keeps the
+    count an int."""
+    size = files._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    split = files.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    n = -(-size // split)
+    if n > 1:
+        # only asked when it can matter: a frame with a shuffle runs it
+        # to report its partition count
+        n = min(n, files.rdd.getNumPartitions())
+    return files.coalesce(max(n, 1))
 
 
 # --------------------------------------------------------------------
@@ -111,23 +172,22 @@ API_VERSION = "0.1.0"  # reference main.py:80, routers.py:46
 
 
 class FileIndexService:
-    """Read-side service over a ``files`` DataFrame (cache it for
-    interactive serving — immutable snapshots make concurrent reads
-    safe, the reference's read-only-connection trick for free)."""
+    """Read-side service over a ``files`` DataFrame: an immutable
+    snapshot makes concurrent reads safe, the reference's
+    read-only-connection trick for free."""
 
     def __init__(self, files: DataFrame, cache: bool = True, source_path: str | None = None):
-        # paginate() runs a count job plus the page job per request;
-        # caching the immutable snapshot makes the second and later
-        # requests scan memory, not parquet.
-        self.files = files.cache() if cache else files
+        # The service keeps its own copy of the snapshot, sized by bytes
+        # (see _snapshot) and cached, so that each request after the
+        # first reads memory, not parquet, in a plan with no exchange.
+        snapshot = _snapshot(files)
+        self.files = snapshot.cache() if cache else snapshot
         # reference HealthCheck.database_path (models.py:158) — the
         # backing store's path; None is valid (in-memory snapshot)
         self.source_path = source_path
 
     def search(self, req: SearchRequest) -> Page:
-        from file_indexer_spark.operators.search import search_files
-
-        matches = search_files(
+        matches = search_matches(
             self.files,
             filename_pattern=req.filename_pattern,
             path_pattern=req.path_pattern,
@@ -138,16 +198,9 @@ class FileIndexService:
             modified_after=req.modified_after,
             modified_before=req.modified_before,
         )
-        return paginate(matches, ["path", "filename"], req.limit, req.offset)
+        return paginate(matches, search_order(), req.limit, req.offset)
 
     def duplicates(self, req: DuplicatesRequest) -> DuplicatesResponse:
-        from pyspark.sql import functions as F
-
-        from file_indexer_spark.operators.duplicates import (
-            duplicate_groups_nested,
-            scope_to_pattern,
-        )
-
         base = scope_to_pattern(
             self.files,
             req.filename_pattern,
@@ -155,54 +208,44 @@ class FileIndexService:
             req.min_file_size,
             req.max_file_size,
         )
-        groups = duplicate_groups_nested(base, req.min_group_size).localCheckpoint(eager=False)
-        total = groups.count()
-        # wasted space over the SAME group set the response describes
+        # both totals describe the SAME group set the page is cut from
         # (min_group_size respected), not all size-2 groups
-        wasted = int(
-            groups.agg(F.coalesce(F.sum("wasted_space"), F.lit(0)).cast("long")).collect()[0][0]
+        page, obs = observed_page(
+            group_duplicates(base, req.min_group_size),
+            group_order(),
+            req.limit,
+            req.offset,
+            total_groups=F.count(F.lit(1)),
+            total_wasted_space=F.coalesce(F.sum("wasted_space"), F.lit(0)),
         )
-        page = groups
-        if req.offset:
-            page = page.offset(req.offset)
-        rows = page.limit(req.limit).collect()
+        rows = page.collect()
+        totals = obs.get
         return DuplicatesResponse(
             groups=rows,
-            total_groups=total,
-            total_wasted_space=wasted,
+            total_groups=totals["total_groups"],
+            total_wasted_space=totals["total_wasted_space"],
             limit=req.limit,
             offset=req.offset,
-            has_more=req.offset + len(rows) < total,
+            has_more=req.offset + len(rows) < totals["total_groups"],
         )
 
     def stats(self):
-        from file_indexer_spark.operators.stats import database_stats
-
         return database_stats(self.files).collect()[0].asDict()
 
     def visualization(self) -> dict:
         """The three chart tables the reference serves in one response
         (routers.py:204-215, database.py:459-550, models.py:147-152):
         size distribution bands, extension top-20, monthly timeline —
-        all three are the registered a9/a10/a11 operators."""
-        from file_indexer_spark.operators.stats import (
-            extension_stats,
-            modification_timeline,
-            size_histogram,
-        )
-
-        return {
-            "size_distribution": [
-                r.asDict() for r in size_histogram(self.files).collect()
-            ],
-            "extension_stats": [
-                r.asDict() for r in extension_stats(self.files).collect()
-            ],
-            "modification_timeline": [
-                {**r.asDict(), "month": r["month"].isoformat() if r["month"] else None}
-                for r in modification_timeline(self.files).collect()
-            ],
-        }
+        the registered a9/a10/a11 operators, collected as one job."""
+        rows = chart_rows(self.files).collect()
+        out = {}
+        for chart, (_, columns, order) in _CHARTS.items():
+            out[chart] = sorted(
+                ({c: r[c] for c in columns} for r in rows if r["chart"] == chart), key=order
+            )
+        for r in out["modification_timeline"]:
+            r["month"] = r["month"].isoformat() if r["month"] else None
+        return out
 
     def health(self) -> dict:
         """Health contract (reference routers.py:36-57, models.py:155-159):
@@ -225,6 +268,37 @@ class FileIndexService:
                 "total_files": 0,
                 "api_version": API_VERSION,
             }
+
+
+# chart -> (its registered operator, its columns, the order the response
+# lists its rows in: the operator's ORDER BY, NULLs first)
+_CHARTS = {
+    "size_distribution": (
+        size_histogram,
+        ("size_range", "sort_order", "count", "total_size"),
+        lambda r: r["sort_order"],
+    ),
+    "extension_stats": (
+        extension_stats,
+        ("extension", "count", "total_size", "average_size"),
+        lambda r: (-r["count"], r["extension"] is not None, r["extension"]),
+    ),
+    "modification_timeline": (
+        modification_timeline,
+        ("month", "count", "total_size"),
+        lambda r: r["month"],
+    ),
+}
+
+
+def chart_rows(files: DataFrame) -> DataFrame:
+    """The a9/a10/a11 chart tables as tagged branches (``chart``) of one
+    frame, so one action computes all three; a10 keeps its top-20 limit
+    here, and the driver splits and orders the few rows."""
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        (op(files).withColumn("chart", F.lit(name)) for name, (op, _, _) in _CHARTS.items()),
+    )
 
 
 # ---- route-layer request/response mapping (framework-free, tested

@@ -986,3 +986,38 @@ def test_pagerank_iterates_only_over_pair_subgraph(spark):
         pairs.selectExpr("doc_b as src", "doc_a as dst")
     )
     assert edges.select("src").distinct().count() == 4
+
+
+def test_serving_plans_over_one_partition_snapshot_have_no_exchange(spark, sf_smoke):
+    """SinglePartition satisfies every distribution an aggregate, window
+    or sort requires, so over the service's one-partition snapshot the
+    search page, duplicates page, chart tables and stats row plan no
+    shuffle (AQE would run each exchange as a job of its own)."""
+    from file_indexer_spark import serving as sv
+    from file_indexer_spark.operators import search as srch
+    from file_indexer_spark.operators import stats as st
+
+    snap = sv.FileIndexService(files_df(spark, sf_smoke)).files
+    try:
+        assert snap.rdd.getNumPartitions() == 1
+        search_page, _ = sv.observed_page(
+            srch.search_matches(snap, filename_pattern="doc_%", min_file_size=100),
+            srch.search_order(), 10, 5, n=F.count(F.lit(1)))
+        dup_page, _ = sv.observed_page(
+            dup.group_duplicates(dup.scope_to_pattern(snap, path_pattern="/src1%")),
+            dup.group_order(), 10, 5, n=F.count(F.lit(1)))
+        for df in (search_page, dup_page, sv.chart_rows(snap), st.database_stats(snap)):
+            assert pi.count_exchanges(df) == 0, pi.simple_plan(df)
+    finally:
+        snap.unpersist()
+
+
+def test_database_stats_plans_no_expand(spark, sf_smoke):
+    """Two COUNT(DISTINCT)s in one aggregate plan an Expand, which drops
+    the input's partitioning; the stats row counts its one distinct
+    column in a frame of its own at any partitioning."""
+    from file_indexer_spark.operators import stats as st
+
+    files = files_df(spark, sf_smoke)
+    for df in (files, files.coalesce(1), files.repartition(4)):
+        assert "Expand" not in pi.simple_plan(st.database_stats(df))

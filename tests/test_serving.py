@@ -8,6 +8,7 @@ block at the bottom, import-gated like create_app)."""
 from __future__ import annotations
 
 import datetime as dt
+import threading
 
 import pytest
 
@@ -97,6 +98,159 @@ def test_post_duplicates_body_and_response_shape(svc):
     with pytest.raises(ValueError):
         sv.duplicates_request_from_body({"min_group_size": 1})
     assert sv.duplicates_request_from_body({"bogus": True}).min_group_size == 2
+
+
+def _answer(fn, seconds=300):
+    """``fn()`` on a daemon thread: a request whose observation is never
+    filled fails here instead of hanging the suite."""
+    out = {}
+
+    def run():
+        try:
+            out["value"] = fn()
+        except Exception as exc:  # noqa: BLE001 - re-raised below
+            out["error"] = exc
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(seconds)
+    assert not worker.is_alive(), "request did not return"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
+def _keys(rows):
+    return [(r["path"], r["filename"]) for r in rows]
+
+
+def test_observed_total_counts_rows_of_an_already_sorted_input(spark, sf_smoke, svc):
+    """An input already ordered on the page keys lets the top-K stop
+    after offset+limit rows; the observed total must still count all."""
+    for files in (svc.files, files_df(spark, sf_smoke).repartition(3)):
+        ordered = files.orderBy("path", "filename")
+        expected = _keys(ordered.collect())
+        total = len(expected)
+        assert 11 + 7 < total
+        page = _answer(lambda: sv.paginate(ordered, ["path", "filename"], limit=7, offset=11))
+        assert page.total_count == total == ordered.count()
+        assert page.has_more
+        assert _keys(page.rows) == expected[11:18]
+
+
+def test_observed_duplicate_totals_do_not_depend_on_the_page(svc):
+    for scope in ({}, {"filename_pattern": "%.fr"}):
+        whole = svc.duplicates(sv.DuplicatesRequest(limit=1000, **scope))
+        assert whole.total_groups == len(whole.groups) >= 4
+        assert whole.total_wasted_space == sum(g["wasted_space"] for g in whole.groups)
+        for offset in (1, whole.total_groups - 2):
+            page = _answer(lambda: svc.duplicates(sv.DuplicatesRequest(limit=3, offset=offset, **scope)))
+            assert (page.total_groups, page.total_wasted_space) == (
+                whole.total_groups, whole.total_wasted_space)
+            assert page.groups == whole.groups[offset:offset + 3]
+            assert page.has_more == (offset + 3 < whole.total_groups)
+
+
+def test_empty_pages_report_totals_and_return(svc):
+    """Zero matches, contradictory size bounds and an offset past the
+    end: the observation is still filled, with 0 or the true total."""
+    total = svc.files.count()
+    groups = svc.duplicates(sv.DuplicatesRequest(limit=1000)).total_groups
+    searches = (
+        (sv.SearchRequest(filename_pattern="no-such-file%"), 0),
+        (sv.SearchRequest(min_file_size=10, max_file_size=5), 0),
+        (sv.SearchRequest(offset=total + 10), total),
+    )
+    for req, want in searches:
+        page = _answer(lambda: svc.search(req))
+        assert (page.rows, page.total_count, page.has_more) == ([], want, False), req
+    duplicates = (
+        (sv.DuplicatesRequest(path_pattern="/no-such-dir/%"), 0),
+        (sv.DuplicatesRequest(min_file_size=10, max_file_size=5), 0),
+        (sv.DuplicatesRequest(offset=groups + 10), groups),
+    )
+    for req, want in duplicates:
+        resp = _answer(lambda: svc.duplicates(req))
+        assert (resp.groups, resp.total_groups, resp.has_more) == ([], want, False), req
+        if want == 0:
+            assert resp.total_wasted_space == 0
+    with pytest.raises(ValueError):
+        sv.paginate(svc.files, ["path"], limit=0)
+
+
+def test_empty_snapshot(spark, sf_smoke):
+    """Every request over an empty catalog answers with zero totals; the
+    stats row rolls its per-checksum groups up to 0, not NULL."""
+    empty = sv.FileIndexService(files_df(spark, sf_smoke).limit(0))
+    try:
+        page = _answer(lambda: empty.search(sv.SearchRequest()))
+        assert (page.rows, page.total_count, page.has_more) == ([], 0, False)
+        resp = _answer(lambda: empty.duplicates(sv.DuplicatesRequest(filename_pattern="%")))
+        assert (resp.groups, resp.total_groups, resp.total_wasted_space) == ([], 0, 0)
+        stats = empty.stats()
+        assert {k: v for k, v in stats.items() if v is not None} == {
+            "total_files": 0, "total_size": 0, "files_with_checksums": 0,
+            "files_without_checksums": 0, "unique_directories": 0, "unique_checksums": 0,
+            "duplicate_groups": 0, "duplicate_files": 0,
+        }
+        assert empty.visualization() == {
+            "size_distribution": [], "extension_stats": [], "modification_timeline": []}
+    finally:
+        empty.files.unpersist()
+
+
+def test_each_request_is_one_job(spark, svc):
+    """Over the one-partition snapshot no request plans an exchange, so
+    search, duplicates and visualization are one job each and stats two
+    (its cross join broadcasts a one-row side). Before the snapshot was
+    coalesced they took 3, 8, 10 and 6."""
+    sc = spark.sparkContext
+    svc.files.count()  # the cache is filled once, not by a request
+    requests = (
+        ("search", lambda: svc.search(sv.SearchRequest(filename_pattern="doc_%", offset=3, limit=5)), 1),
+        ("duplicates", lambda: svc.duplicates(sv.DuplicatesRequest(offset=1, limit=5)), 1),
+        ("scoped-duplicates",
+         lambda: svc.duplicates(sv.DuplicatesRequest(path_pattern="/src1%", min_file_size=100)), 1),
+        ("visualization", svc.visualization, 1),
+        ("stats", svc.stats, 2),
+    )
+    for name, call, most in requests:
+        group = f"serve-job-guard-{name}"
+        sc.setJobGroup(group, f"{name} job-count guard")
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= most, name
+
+
+def test_service_over_a_frame_without_statistics(spark, sf_smoke, svc):
+    """A frame built from rows reports Long.MaxValue bytes; the service
+    must still construct, keep (not raise) its partition count, and
+    answer every request type as the parquet-backed service does."""
+    src = files_df(spark, sf_smoke)
+    created = spark.createDataFrame(src.collect(), src.schema)
+    assert created._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() == 2**63 - 1
+    other = sv.FileIndexService(created)
+    try:
+        assert other.files.rdd.getNumPartitions() <= created.rdd.getNumPartitions()
+        search = sv.SearchRequest(filename_pattern="doc_%", offset=3, limit=20)
+        a, b = svc.search(search), other.search(search)
+        assert (b.rows, b.total_count, b.has_more) == (a.rows, a.total_count, a.has_more)
+        for dup in (sv.DuplicatesRequest(offset=2, limit=5),
+                    sv.DuplicatesRequest(filename_pattern="%.fr", limit=50)):
+            a, b = svc.duplicates(dup), other.duplicates(dup)
+            assert (b.groups, b.total_groups, b.total_wasted_space, b.has_more) == (
+                a.groups, a.total_groups, a.total_wasted_space, a.has_more)
+        a, b = svc.stats(), other.stats()
+        assert b == {**a, "average_file_size": pytest.approx(a["average_file_size"])}
+        a, b = svc.visualization(), other.visualization()
+        for row in a["extension_stats"]:
+            row["average_size"] = pytest.approx(row["average_size"])
+        assert b == a
+    finally:
+        other.files.unpersist()
 
 
 def test_routes_through_testclient(spark, sf_smoke):
