@@ -1963,6 +1963,8 @@ def main_incremental() -> None:
             "dd22 scratch vs dd23's affected-components batch refresh "
             "over stored edges+labels (the union kNN re-score is the "
             "honest boundary; the propagation_only row isolates it); "
+            "since round 13 its build_once row also includes landing "
+            "the raw base kNN edges, which knn_join_refresh reuses; "
             "round-13 rows: refresh_incremental_knn = the same dd23 "
             "refresh but the union kNN maintained via knn_join_refresh "
             "(re-score only IVF lists whose membership the batch "

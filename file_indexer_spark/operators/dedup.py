@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from file_indexer_spark.functions import hashing as H
+from file_indexer_spark.landing import land_tables
 
 # Document-frequency cap for dd2 candidate generation. Pruned-set
 # Jaccard drops shingles in > MAX_DF docs from every set: a shingle
@@ -289,6 +290,17 @@ def lsh_index_tables(docs: DataFrame) -> dict[str, DataFrame]:
     near-dup detection."""
     sets = _shingle_sets(docs)
     return {"bands": _minhash_bands(sets), "shingle_sets": sets}
+
+
+def write_lsh_index(spark, docs: DataFrame, workdir: str) -> dict[str, DataFrame]:
+    """Land :func:`lsh_index_tables` under ``workdir`` and return the
+    re-reads. One table per write, bands first: both derive from one
+    unmaterialized shingle checkpoint, which the first write
+    materializes for the second."""
+    mats: dict[str, DataFrame] = {}
+    for name, df in lsh_index_tables(docs).items():
+        mats |= land_tables(spark, {name: df}, workdir)
+    return mats
 
 
 def lsh_pairs_from_tables(

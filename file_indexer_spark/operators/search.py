@@ -96,16 +96,6 @@ def search_files(
     return out
 
 
-def search_substring(files: DataFrame, query: str) -> DataFrame:
-    """Case-insensitive substring search over filename OR path
-    (reference Go P3, file_indexer_go/db/database.go:116-127:
-    ILIKE '%q%' ... ORDER BY filename)."""
-    pattern = f"%{query}%"
-    return files.filter(
-        F.col("filename").ilike(pattern) | F.col("path").ilike(pattern)
-    ).orderBy("filename", "path")
-
-
 def point_lookup(files: DataFrame, path: str, filename: str) -> DataFrame:
     """PK point lookup (reference P5, indexer.py:618-625)."""
     return files.filter((F.col("path") == path) & (F.col("filename") == filename))

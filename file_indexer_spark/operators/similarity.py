@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from file_indexer_spark.landing import land_tables
+
 TOP_K = 10
 N_QUERIES = 10  # vec_id < 10 are the benchmark query vectors
 NPROBE = 3
@@ -1400,26 +1402,15 @@ def write_ivfpq_index(
     written as-is when present so an edited index round-trips.
 
     The tables are independent (no shared checkpoint in any lineage),
-    so the writes run as OVERLAPPED driver-thread jobs (guide §2.6,
-    round-13) — the broadcast-sized centroid/codebook/meta writes
-    back-fill the cores the clustered code write leaves idle in its
-    tail."""
-    import os
-
-    from file_indexer_spark.parallel import run_parallel
-
-    def write_one(item):
-        name, df = item
-        path = os.path.join(workdir, name)
-        if name == "codes":
-            df = df.repartitionByRange(
-                IVFPQ_CODES_RANGE_PARTITIONS, "centroid_id"
-            ).sortWithinPartitions("centroid_id", "vec_id")
-        df.write.mode("overwrite").parquet(path)
-        return name, spark.read.parquet(path)
-
-    items = list(index.items())
-    return dict(run_parallel([lambda it=it: write_one(it) for it in items]))
+    so they land in one overlapped :func:`land_tables` call — the
+    broadcast-sized centroid/codebook/meta writes back-fill the cores
+    the clustered code write leaves idle in its tail."""
+    tables = dict(index)
+    if "codes" in tables:
+        tables["codes"] = tables["codes"].repartitionByRange(
+            IVFPQ_CODES_RANGE_PARTITIONS, "centroid_id"
+        ).sortWithinPartitions("centroid_id", "vec_id")
+    return land_tables(spark, tables, workdir)
 
 
 def ivfpq_compact(

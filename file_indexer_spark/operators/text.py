@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from file_indexer_spark.functions import hashing as H
+from file_indexer_spark.landing import land_tables
 
 # Closed-class marker words used for the stopword-ratio quality signal.
 # (The synthetic corpus vocabulary contains 'the' and 'a'.)
@@ -60,11 +61,6 @@ def quality_composite() -> F.Column:
     stop_ratio = F.col("n_stopwords").cast("double") / F.col("n_tokens").cast("double")
     length_credit = F.least(F.col("n_tokens").cast("double") / 300.0, F.lit(1.0))
     return 0.5 * ttr + 0.3 * (1.0 - stop_ratio) + 0.2 * length_credit
-
-
-def with_tokens(docs: DataFrame) -> DataFrame:
-    """Whitespace tokenization (the BPE-ish regex split is t2's job)."""
-    return docs.withColumn("tokens", _tokens())
 
 
 def token_stats(docs: DataFrame) -> DataFrame:
@@ -867,25 +863,21 @@ def write_bm25_index(
     layout discipline, one writer.
 
     The tables are independent (postings/doclen/scalars share no
-    checkpoint), so the writes run as OVERLAPPED driver-thread jobs
-    (guide §2.6, round-13): each job's task tail back-fills the cores
-    the others free instead of serializing three wall-clocks."""
-    import os
+    checkpoint), so they land in one overlapped :func:`land_tables`
+    call: each job's task tail back-fills the cores the others free
+    instead of serializing three wall-clocks."""
+    return land_tables(spark, _term_clustered(mats, "term", "doc_id"), workdir)
 
-    from file_indexer_spark.parallel import run_parallel
 
-    def write_one(item):
-        name, df = item
-        path = os.path.join(workdir, name)
-        if name == "postings":
-            df = df.repartitionByRange(
-                BM25_POSTINGS_RANGE_PARTITIONS, "term"
-            ).sortWithinPartitions("term", "doc_id")
-        df.write.mode("overwrite").parquet(path)
-        return name, spark.read.parquet(path)
-
-    items = list(mats.items())
-    return dict(run_parallel([lambda it=it: write_one(it) for it in items]))
+def _term_clustered(mats: dict[str, DataFrame], *sort_keys: str) -> dict[str, DataFrame]:
+    """``mats`` with its postings range-partitioned by term and sorted
+    within partitions by ``sort_keys``."""
+    out = dict(mats)
+    if "postings" in out:
+        out["postings"] = out["postings"].repartitionByRange(
+            BM25_POSTINGS_RANGE_PARTITIONS, "term"
+        ).sortWithinPartitions(*sort_keys)
+    return out
 
 
 def bm25_compact(
@@ -985,18 +977,7 @@ def write_positional_index(
     """Materialize the positional postings term-clustered (the
     write_bm25_index layout discipline — same range-partition count,
     same serve-time row-group pruning argument)."""
-    import os
-
-    out: dict[str, DataFrame] = {}
-    for name, df in mats.items():
-        path = os.path.join(workdir, name)
-        if name == "postings":
-            df = df.repartitionByRange(
-                BM25_POSTINGS_RANGE_PARTITIONS, "term"
-            ).sortWithinPartitions("term", "doc_id", "p")
-        df.write.mode("overwrite").parquet(path)
-        out[name] = spark.read.parquet(path)
-    return out
+    return land_tables(spark, _term_clustered(mats, "term", "doc_id", "p"), workdir)
 
 
 def positional_upsert(

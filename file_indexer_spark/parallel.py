@@ -2,18 +2,18 @@
 
 Spark's scheduler runs several jobs at once inside one application;
 actions are only sequential because driver code calls them
-sequentially. Gate builds that land several INDEPENDENT tables
-(e.g. an index's postings + doclen + scalars) previously paid the
-sum of the writes' wall-clocks; submitting them from a small thread
-pool lets each job's tail back-fill the executors freed by the
-others. FIFO scheduling (the default) gives exactly the back-fill
-behaviour we want.
+sequentially. The caller is ``landing.land_tables``: a gate that lands
+several INDEPENDENT tables (e.g. an index's postings + doclen +
+scalars) would otherwise pay the sum of the writes' wall-clocks;
+submitting them from a small thread pool lets each job's tail
+back-fill the executors freed by the others. FIFO scheduling (the
+default) gives exactly the back-fill behaviour we want.
 
-Safety rule observed by every caller: thunks must not share an
-UNMATERIALIZED ``localCheckpoint`` frame — concurrent first actions
-on one would compute it twice (Spark does not coordinate concurrent
-materialization of the same lazy checkpoint). Parquet-read-backed or
-fully independent frames only.
+Safety rule: thunks must not share an UNMATERIALIZED
+``localCheckpoint`` frame — concurrent first actions on one would
+compute it twice (Spark does not coordinate concurrent materialization
+of the same lazy checkpoint). Parquet-read-backed or fully independent
+frames only.
 """
 
 from __future__ import annotations

@@ -28,7 +28,6 @@ from file_indexer_spark.registry_core import (  # noqa: F401
     _events,
     _files,
     _land_arrivals,
-    _stream_workdir,
     _table,
     register,
 )

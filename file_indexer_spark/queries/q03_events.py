@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from file_indexer_spark.functions import hashing as H  # noqa: F401
+from file_indexer_spark.landing import gate_workdir
 from file_indexer_spark.operators import curation as cu  # noqa: F401
 from file_indexer_spark.operators import dedup as dd  # noqa: F401
 from file_indexer_spark.operators import duplicates as dup  # noqa: F401
@@ -28,7 +29,6 @@ from file_indexer_spark.registry_core import (  # noqa: F401
     _events,
     _files,
     _land_arrivals,
-    _stream_workdir,
     _table,
     register,
 )
@@ -132,7 +132,7 @@ def st8_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.streaming import windows as sw
 
     tune_session(spark)
-    base, tag = _stream_workdir("fis_st8", sf_dir)
+    base, tag = gate_workdir("fis_st8")
     src = os.path.join(base, "src")
     ev2 = _events(spark, sf_dir)
     mid = ev2.agg(F.max("event_id")).first()[0] // 2
@@ -218,7 +218,7 @@ def st9_interval_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.streaming.util import run_to_memory_sink
 
     tune_session(spark)
-    base, tag = _stream_workdir("fis_st9", sf_dir)
+    base, tag = gate_workdir("fis_st9")
     src = os.path.join(base, "src")
     ev2 = _events(spark, sf_dir)
     mid = ev2.agg(F.max("event_id")).first()[0] // 2
@@ -280,7 +280,7 @@ def st10_interval_join_outer_stream(spark: SparkSession, sf_dir: str) -> DataFra
     from file_indexer_spark.streaming.util import run_to_memory_sink
 
     tune_session(spark)
-    base, tag = _stream_workdir("fis_st10", sf_dir)
+    base, tag = gate_workdir("fis_st10")
     src = os.path.join(base, "src")
     ev2 = _events(spark, sf_dir)
     mid = ev2.agg(F.max("event_id")).first()[0] // 2

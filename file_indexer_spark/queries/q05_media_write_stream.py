@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from file_indexer_spark.functions import hashing as H  # noqa: F401
+from file_indexer_spark.landing import gate_workdir
 from file_indexer_spark.operators import curation as cu  # noqa: F401
 from file_indexer_spark.operators import dedup as dd  # noqa: F401
 from file_indexer_spark.operators import duplicates as dup  # noqa: F401
@@ -28,7 +29,6 @@ from file_indexer_spark.registry_core import (  # noqa: F401
     _events,
     _files,
     _land_arrivals,
-    _stream_workdir,
     _table,
     register,
 )
@@ -169,10 +169,7 @@ def w1_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The driver-side collect is bounded test plumbing (it writes the
     fixture tree); the indexing itself is the production path.
     """
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from file_indexer_spark.indexer.files_table import FilesTable
     from file_indexer_spark.indexer.two_phase import update_index
@@ -180,10 +177,8 @@ def w1_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w1_{tag}")
+    base, _ = gate_workdir("fis_w1")
     tree = os.path.join(base, "tree")
-    shutil.rmtree(base, ignore_errors=True)
     os.makedirs(tree)
     for r in docs:
         with open(os.path.join(tree, f"doc_{r['doc_id']}.txt"), "w", encoding="utf-8") as fh:
@@ -261,7 +256,7 @@ def st1_streaming_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.streaming import windows as sw
 
     tune_session(spark)
-    base, tag = _stream_workdir("fis_st1", sf_dir)
+    base, tag = gate_workdir("fis_st1")
     src = os.path.join(base, "src")
     ev2 = events_df(spark, sf_dir)
     _land_arrivals(
@@ -302,7 +297,7 @@ def st2_streaming_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.streaming import incremental as inc
 
     tune_session(spark)
-    base, _tag = _stream_workdir("fis_st2", sf_dir)
+    base, _ = gate_workdir("fis_st2")
     src = os.path.join(base, "src")
 
     scan = load_table(spark, sf_dir, "documents").select(
@@ -388,7 +383,7 @@ def st3_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.streaming import windows as sw
 
     tune_session(spark)
-    base, tag = _stream_workdir("fis_st3", sf_dir)
+    base, tag = gate_workdir("fis_st3")
     src = os.path.join(base, "src")
     ev2 = events_df(spark, sf_dir)
     mid = ev2.agg(F.max("event_id")).first()[0] // 2

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from file_indexer_spark.functions import hashing as H  # noqa: F401
+from file_indexer_spark.landing import gate_workdir, land_tables
 from file_indexer_spark.operators import curation as cu  # noqa: F401
 from file_indexer_spark.operators import dedup as dd  # noqa: F401
 from file_indexer_spark.operators import duplicates as dup  # noqa: F401
@@ -28,7 +29,6 @@ from file_indexer_spark.registry_core import (  # noqa: F401
     _events,
     _files,
     _land_arrivals,
-    _stream_workdir,
     _table,
     register,
 )
@@ -131,18 +131,11 @@ def dd12_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH index (parquet round-trip of the band + shingle-set tables —
     the x2 compute-once pattern applied to dd3). Work is
     O(batch x matched buckets), never O(corpus)."""
-    import os
-
     docs = _table(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 10 == 7)
     base = docs.filter(F.col("doc_id") % 10 != 7)
-    workdir, _ = _stream_workdir("fis_dd12", sf_dir)
-    mats: dict[str, DataFrame] = {}
-    for name, df in dd.lsh_index_tables(base).items():
-        path = os.path.join(workdir, name)
-        df.write.mode("overwrite").parquet(path)
-        mats[name] = spark.read.parquet(path)
-    return dd.incremental_lsh_pairs(mats, new)
+    workdir, _ = gate_workdir("fis_dd12")
+    return dd.incremental_lsh_pairs(dd.write_lsh_index(spark, base, workdir), new)
 
 
 # dd13 shares dd7's oracle verbatim: the incremental refresh must equal
@@ -155,25 +148,17 @@ def dd13_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest batch: probe the index (dd12) and refresh only the touched
     clusters. Output is the whole corpus's assignment table, provably
     identical to dd7 recomputed from scratch."""
-    import os
-
     docs = _table(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 10 == 7)
     base = docs.filter(F.col("doc_id") % 10 != 7)
-    workdir, _ = _stream_workdir("fis_dd13", sf_dir)
-    mats: dict[str, DataFrame] = {}
-    for name, df in dd.lsh_index_tables(base).items():
-        path = os.path.join(workdir, name)
-        df.write.mode("overwrite").parquet(path)
-        mats[name] = spark.read.parquet(path)
+    workdir, _ = gate_workdir("fis_dd13")
+    mats = dd.write_lsh_index(spark, base, workdir)
     # round-12 optimization: the base pair list (and hence the stored
     # assignment) derives from the just-materialized band/shingle
     # tables instead of re-running the signing machinery over the
     # corpus text a second time — row-for-row the same pairs
     assignments = dd.dedup_clusters(base, dd.lsh_pairs_from_tables(mats))
-    path = os.path.join(workdir, "assignments")
-    assignments.write.mode("overwrite").parquet(path)
-    mats["assignments"] = spark.read.parquet(path)
+    mats |= land_tables(spark, {"assignments": assignments}, workdir)
     new_pairs = dd.incremental_lsh_pairs(mats, new)
     return dd.incremental_cluster_refresh(mats["assignments"], new_pairs, new)
 
@@ -278,7 +263,7 @@ def st4_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.streaming import dedup as sd
 
     tune_session(spark)
-    base, tag = _stream_workdir("fis_st4", sf_dir)
+    base, tag = gate_workdir("fis_st4")
     src = os.path.join(base, "src")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     _land_arrivals(
@@ -403,10 +388,7 @@ def w2_two_phase_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata with hashing off, phase 2's A7 work selection hashes only
     duplicate-size candidates; the oracle recomputes which files must
     (and must not) have checksums straight from the size histogram."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from file_indexer_spark.indexer.files_table import FilesTable
     from file_indexer_spark.indexer.two_phase import two_phase_index
@@ -414,10 +396,8 @@ def w2_two_phase_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w2_{tag}")
+    base, _ = gate_workdir("fis_w2")
     tree = os.path.join(base, "tree")
-    shutil.rmtree(base, ignore_errors=True)
     os.makedirs(tree)
     for r in docs:
         with open(os.path.join(tree, f"doc_{r['doc_id']}.txt"), "w", encoding="utf-8") as fh:

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from file_indexer_spark.functions import hashing as H  # noqa: F401
+from file_indexer_spark.landing import gate_workdir
 from file_indexer_spark.operators import curation as cu  # noqa: F401
 from file_indexer_spark.operators import dedup as dd  # noqa: F401
 from file_indexer_spark.operators import duplicates as dup  # noqa: F401
@@ -28,7 +29,6 @@ from file_indexer_spark.registry_core import (  # noqa: F401
     _events,
     _files,
     _land_arrivals,
-    _stream_workdir,
     _table,
     register,
 )
@@ -514,10 +514,8 @@ def w3_cleanup_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side collect writes the fixture tree; the cleanup itself is
     the production path.
     """
-    import hashlib
     import os
     import shutil
-    import tempfile
 
     from file_indexer_spark.indexer.cleanup import probe_deleted_files
     from file_indexer_spark.indexer.files_table import FilesTable
@@ -526,10 +524,8 @@ def w3_cleanup_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w3_{tag}")
+    base, _ = gate_workdir("fis_w3")
     tree = os.path.join(base, "tree")
-    shutil.rmtree(base, ignore_errors=True)
     for sub in ("sub0", "sub1"):
         os.makedirs(os.path.join(tree, sub))
     for r in docs:
@@ -594,7 +590,7 @@ def st5_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.streaming import windows as sw
 
     tune_session(spark)
-    base, tag = _stream_workdir("fis_st5", sf_dir)
+    base, tag = gate_workdir("fis_st5")
     src = os.path.join(base, "src")
     ev2 = events_df(spark, sf_dir)
     _land_arrivals(
@@ -621,17 +617,12 @@ def w4_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp format; the oracle is the plain files derivation, so any
     serialization drift (precision, timezone, nulls) hash-mismatches.
     """
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from file_indexer_spark.indexer.files_table import FilesTable
 
     tune_session(spark)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w4_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base, _ = gate_workdir("fis_w4")
 
     src = FilesTable(spark, os.path.join(base, "src_db"))
     src.overwrite(files_df(spark, sf_dir))
@@ -822,10 +813,7 @@ def w5_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-spurious-rehash half of D1 (reuse counters) is pinned by
     tests/test_indexer_write.py, since an unnecessary rehash of
     unchanged content reproduces the same digest."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from file_indexer_spark.indexer.files_table import FilesTable
     from file_indexer_spark.indexer.two_phase import update_index
@@ -833,10 +821,8 @@ def w5_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w5_{tag}")
+    base, _ = gate_workdir("fis_w5")
     tree = os.path.join(base, "tree")
-    shutil.rmtree(base, ignore_errors=True)
     os.makedirs(tree)
     for r in docs:
         with open(os.path.join(tree, f"doc_{r['doc_id']}.txt"), "w", encoding="utf-8") as fh:

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from file_indexer_spark.functions import hashing as H  # noqa: F401
+from file_indexer_spark.landing import gate_workdir
 from file_indexer_spark.operators import curation as cu  # noqa: F401
 from file_indexer_spark.operators import dedup as dd  # noqa: F401
 from file_indexer_spark.operators import duplicates as dup  # noqa: F401
@@ -28,7 +29,6 @@ from file_indexer_spark.registry_core import (  # noqa: F401
     _events,
     _files,
     _land_arrivals,
-    _stream_workdir,
     _table,
     register,
 )
@@ -444,7 +444,7 @@ def st6_streaming_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.streaming import windows as sw
 
     tune_session(spark)
-    base, tag = _stream_workdir("fis_st6", sf_dir)
+    base, tag = gate_workdir("fis_st6")
     src = os.path.join(base, "src")
     ev2 = events_df(spark, sf_dir)
     _land_arrivals(
@@ -484,15 +484,8 @@ def w6_sharded_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged), so a row lost in the write, a shard routed wrong, or a
     partition-column type drift (partition values come back via
     directory-name inference) all hash-mismatch."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     tune_session(spark)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w6_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base, _ = gate_workdir("fis_w6")
     sp.export_sharded(_table(spark, sf_dir, "documents"), base)
 
     back = spark.read.parquet(base)
@@ -523,17 +516,12 @@ def w7_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``read_at(1)``. The oracle is the plain files derivation, so any
     leakage of later generations into the snapshot — or any loss in the
     generation-log roundtrip — hash-mismatches."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from file_indexer_spark.indexer.files_table import FilesTable
 
     tune_session(spark)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w7_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base, _ = gate_workdir("fis_w7")
 
     t = FilesTable(spark, os.path.join(base, "db"), keep_history=True)
     original = files_df(spark, sf_dir)
@@ -578,17 +566,12 @@ def w7b_vacuum_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     log that mis-replays partial upserts/deletes/reinserts,
     hash-mismatches. Vacuumed-generation unreadability (read_at(3)
     raising) is pinned in tests/test_indexer_write.py."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from file_indexer_spark.indexer.files_table import FilesTable
 
     tune_session(spark)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w7b_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base, _ = gate_workdir("fis_w7b")
 
     t = FilesTable(spark, os.path.join(base, "db"), keep_history=True)
     original = files_df(spark, sf_dir)
@@ -643,17 +626,12 @@ def w8_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mismatches. Scale shape: each micro-batch costs one bucketed
     partial upsert (only touched pk_buckets rewrite — two_phase.py's
     merge path), state none."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from file_indexer_spark.indexer.files_table import FilesTable
 
     tune_session(spark)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w8_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base, _ = gate_workdir("fis_w8")
     src = os.path.join(base, "src")
 
     original = files_df(spark, sf_dir)
@@ -860,7 +838,7 @@ def st7_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.streaming import curation as sc
 
     tune_session(spark)
-    base, tag = _stream_workdir("fis_st7", sf_dir)
+    base, tag = gate_workdir("fis_st7")
     src = os.path.join(base, "src")
     docs = _table(spark, sf_dir, "documents")
     ranked = docs.withColumn(

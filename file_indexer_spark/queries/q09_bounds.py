@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from file_indexer_spark.functions import hashing as H  # noqa: F401
+from file_indexer_spark.landing import gate_workdir
 from file_indexer_spark.operators import curation as cu  # noqa: F401
 from file_indexer_spark.operators import dedup as dd  # noqa: F401
 from file_indexer_spark.operators import duplicates as dup  # noqa: F401
@@ -28,7 +29,6 @@ from file_indexer_spark.registry_core import (  # noqa: F401
     _events,
     _files,
     _land_arrivals,
-    _stream_workdir,
     _table,
     register,
 )
@@ -51,12 +51,6 @@ from file_indexer_spark.queries.q08_round4plus import _M7_CTES, _M7_SAMPLE  # no
 # a contract break emits rows and fails the gate loudly. Tests in
 # tests/test_bounds.py prove each companion is NON-vacuous (corrupted
 # twins produce violations).
-
-def _bounds_oracle() -> str:
-    from file_indexer_spark.operators.bounds import EMPTY_VIOLATIONS_SQL
-
-    return EMPTY_VIOLATIONS_SQL
-
 
 @register(
     "t6a_bounds",
@@ -291,7 +285,7 @@ def st11_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.streaming import windows as sw
 
     tune_session(spark)
-    base, tag = _stream_workdir("fis_st11", sf_dir)
+    base, _ = gate_workdir("fis_st11")
     src = os.path.join(base, "src")
     out = os.path.join(base, "changelog")
     ev2 = events_df(spark, sf_dir)

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from file_indexer_spark.functions import hashing as H  # noqa: F401
+from file_indexer_spark.landing import gate_workdir, land_tables
 from file_indexer_spark.operators import curation as cu  # noqa: F401
 from file_indexer_spark.operators import dedup as dd  # noqa: F401
 from file_indexer_spark.operators import duplicates as dup  # noqa: F401
@@ -28,8 +29,6 @@ from file_indexer_spark.registry_core import (  # noqa: F401
     _events,
     _files,
     _land_arrivals,
-    _mat_tables,
-    _stream_workdir,
     _table,
     register,
 )
@@ -174,17 +173,12 @@ def w10_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragmented first (a pre-compacted table would make the gate
     vacuous — the h9 lesson)."""
     import glob
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from file_indexer_spark.indexer.files_table import FilesTable
 
     tune_session(spark)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w10_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base, _ = gate_workdir("fis_w10")
 
     t = FilesTable(spark, os.path.join(base, "db"), buckets=8)
     original = files_df(spark, sf_dir)
@@ -337,13 +331,11 @@ def sim11_ivfpq_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     then answer the query batch from the re-reads only. At 100 TB the
     serving path reads 4-byte codes clustered by list; the raw float
     corpus is never touched after the build."""
-    import os
-
     emb = _table(spark, sf_dir, "embeddings")
-    base, _ = _stream_workdir("fis_sim11", sf_dir)
+    base, _ = gate_workdir("fis_sim11")
     # round-13: the four index tables share no checkpoint — land them
     # as overlapped driver-thread jobs (guide §2.6)
-    mats = _mat_tables(spark, sim.ivfpq_index_tables(emb), base)
+    mats = land_tables(spark, sim.ivfpq_index_tables(emb), base)
     queries = emb.filter(F.col("vec_id") < sim.N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -364,14 +356,12 @@ def sim12_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed is touched. The search then runs over the merged index.
     Completes the incremental family: dd12/dd13 maintain the dedup
     index, sim12 the ANN index."""
-    import os
-
     emb = _table(spark, sf_dir, "embeddings")
     new = emb.filter(F.col("vec_id") % 10 == 7)
     base = emb.filter(F.col("vec_id") % 10 != 7)
-    workdir, _ = _stream_workdir("fis_sim12", sf_dir)
+    workdir, _ = gate_workdir("fis_sim12")
     # round-13: overlapped independent-table landing (guide §2.6)
-    mats = _mat_tables(spark, sim.ivfpq_index_tables(base), workdir)
+    mats = land_tables(spark, sim.ivfpq_index_tables(base), workdir)
     merged = sim.ivfpq_append(mats, new)
     queries = emb.filter(F.col("vec_id") < sim.N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -390,14 +380,12 @@ def x2_dup_assets_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     report phase over the parquet re-reads only. The report never
     touches a blob; incremental re-runs and per-modality audits reuse
     the same tables."""
-    import os
-
     docs = _table(spark, sf_dir, "documents")
-    base, _ = _stream_workdir("fis_x2", sf_dir)
+    base, _ = gate_workdir("fis_x2")
     # round-13: the four modality member tables are independent decode
     # lineages (the text branch's internal checkpoints are private to
     # it) — land them as overlapped driver-thread jobs (guide §2.6)
-    mats = _mat_tables(spark, xm.fingerprint_tables(docs), base)
+    mats = land_tables(spark, xm.fingerprint_tables(docs), base)
     return xm.duplicate_assets_from_tables(mats)
 
 
@@ -468,7 +456,7 @@ def st12_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.streaming import windows as sw
 
     tune_session(spark)
-    base, tag = _stream_workdir("fis_st12", sf_dir)
+    base, _ = gate_workdir("fis_st12")
     src = os.path.join(base, "src")
     out = os.path.join(base, "changelog")
     ev2 = events_df(spark, sf_dir)

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from file_indexer_spark.landing import gate_workdir, land_tables
 from file_indexer_spark.operators import crossmodal as xm  # noqa: F401
 from file_indexer_spark.operators import dedup as dd  # noqa: F401
 from file_indexer_spark.registry_core import (  # noqa: F401
@@ -16,7 +17,6 @@ from file_indexer_spark.registry_core import (  # noqa: F401
     _events,
     _files,
     _land_arrivals,
-    _stream_workdir,
     _table,
     register,
 )
@@ -48,7 +48,7 @@ def st13_streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     from file_indexer_spark.streaming import neardup as snd
 
     tune_session(spark)
-    base, _ = _stream_workdir("fis_st13", sf_dir)
+    base, _ = gate_workdir("fis_st13")
     src = os.path.join(base, "src")
     state = os.path.join(base, "state")
     ckpt = os.path.join(base, "ckpt")
@@ -93,27 +93,23 @@ def x3_dup_assets_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _table(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 10 == 7)
     base = docs.filter(F.col("doc_id") % 10 != 7)
-    workdir, _ = _stream_workdir("fis_x3", sf_dir)
+    workdir, _ = gate_workdir("fis_x3")
 
-    def p(name: str, version: str | None = None) -> str:
-        return os.path.join(workdir, name if version is None else f"{name}/{version}")
+    def p(name: str) -> str:
+        return os.path.join(workdir, name)
 
+    # one landing per table, in this order: the text members and the
+    # index tables share the base corpus's shingle checkpoint
     state0 = xm.fingerprint_state(base)
+    state0["text_members/v0"] = state0.pop("text_members")
+    stored: dict[str, DataFrame] = {}
     for name in ("image_members", "audio_members", "video_members",
-                 "lsh_bands", "lsh_shingle_sets"):
-        state0[name].write.mode("overwrite").parquet(p(name))
-    state0["text_members"].write.mode("overwrite").parquet(p("text_members", "v0"))
-
-    stored = {
-        name: spark.read.parquet(p(name))
-        for name in ("image_members", "audio_members", "video_members",
-                     "lsh_bands", "lsh_shingle_sets")
-    }
-    stored["text_members"] = spark.read.parquet(p("text_members", "v0"))
-    # text refresh consumes the PRE-append index state; write it first
-    xm.fingerprint_state_append(stored, new)["text_members"].write.mode(
-        "overwrite"
-    ).parquet(p("text_members", "v1"))
+                 "lsh_bands", "lsh_shingle_sets", "text_members/v0"):
+        stored |= land_tables(spark, {name: state0[name]}, workdir)
+    stored["text_members"] = stored.pop("text_members/v0")
+    # text refresh consumes the PRE-append index state; land it first
+    refreshed = xm.fingerprint_state_append(stored, new)["text_members"]
+    text_v1 = land_tables(spark, {"text_members/v1": refreshed}, workdir)
     # media + index: batch-only slices, appended to the stored dirs
     xm._image_members(new).write.mode("append").parquet(p("image_members"))
     xm._audio_members(new).write.mode("append").parquet(p("audio_members"))
@@ -124,7 +120,7 @@ def x3_dup_assets_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return xm.duplicate_assets_from_tables(
         {
-            "text_members": spark.read.parquet(p("text_members", "v1")),
+            "text_members": text_v1["text_members/v1"],
             "image_members": spark.read.parquet(p("image_members")),
             "audio_members": spark.read.parquet(p("audio_members")),
             "video_members": spark.read.parquet(p("video_members")),
@@ -163,7 +159,7 @@ def w12_pruned_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.indexer.files_table import FilesTable
 
     tune_session(spark)
-    base, _ = _stream_workdir("fis_w12", sf_dir)
+    base, _ = gate_workdir("fis_w12")
     t = FilesTable(spark, os.path.join(base, "db"), buckets=16)
     original = files_df(spark, sf_dir)
     t.overwrite(original)
@@ -203,7 +199,7 @@ def x4_streaming_crossmodal_ingest(spark: SparkSession, sf_dir: str) -> DataFram
     from file_indexer_spark.streaming import crossmodal as sxm
 
     tune_session(spark)
-    base, _ = _stream_workdir("fis_x4", sf_dir)
+    base, _ = gate_workdir("fis_x4")
     src = os.path.join(base, "src")
     state = os.path.join(base, "state")
     ckpt = os.path.join(base, "ckpt")
@@ -253,7 +249,7 @@ def sim13_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.streaming import ann as sann
 
     tune_session(spark)
-    base, _ = _stream_workdir("fis_sim13", sf_dir)
+    base, _ = gate_workdir("fis_sim13")
     src = os.path.join(base, "src")
     state = os.path.join(base, "state")
     ckpt = os.path.join(base, "ckpt")
@@ -308,7 +304,7 @@ def w11_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.indexer.files_table import FilesTable
 
     tune_session(spark)
-    base, _ = _stream_workdir("fis_w11", sf_dir)
+    base, _ = gate_workdir("fis_w11")
     t = FilesTable(spark, os.path.join(base, "db"), buckets=8, keep_history=True)
     original = files_df(spark, sf_dir)
     t.overwrite(original)                                   # gen 1

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from file_indexer_spark.landing import gate_workdir
 from file_indexer_spark.operators import sampling as sp
 from file_indexer_spark.operators import similarity as sim
 from file_indexer_spark.operators import text as tx
@@ -19,7 +20,6 @@ from file_indexer_spark.registry_core import (  # noqa: F401
     ORACLES,
     QUERIES,
     _files,
-    _stream_workdir,
     _table,
     register,
 )
@@ -186,17 +186,12 @@ def w14_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite, a wrong pre/post image, or a delete surfacing new-side
     values all hash-mismatch. The diff itself reads only the buckets
     whose manifest entries moved (pytest-pinned via inputFiles)."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from file_indexer_spark.indexer.files_table import FilesTable
 
     tune_session(spark)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w14_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base, _ = gate_workdir("fis_w14")
 
     t = FilesTable(spark, os.path.join(base, "db"), buckets=16, keep_history=True)
     orig = files_df(spark, sf_dir)
@@ -320,17 +315,12 @@ def w13_zero_copy_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivation, so any leakage of source mutations into the clone, any
     shared-file rewrite, or any GC reclaiming a hardlinked inode
     hash-mismatches."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from file_indexer_spark.indexer.files_table import FilesTable
 
     tune_session(spark)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w13_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base, _ = gate_workdir("fis_w13")
 
     t = FilesTable(spark, os.path.join(base, "src"), buckets=16)
     orig = files_df(spark, sf_dir)
@@ -363,7 +353,7 @@ def st14_streaming_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.streaming import windows as sw
 
     tune_session(spark)
-    base, _ = _stream_workdir("fis_st14", sf_dir)
+    base, _ = gate_workdir("fis_st14")
     src = os.path.join(base, "src")
     out = os.path.join(base, "changelog")
     ev2 = events_df(spark, sf_dir)
@@ -429,17 +419,12 @@ def w15_cdf_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scratch in SQL, so a missed delta, a wrong sign, a no-op row
     leaking into the feed, or a band that failed to empty all
     hash-mismatch."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from file_indexer_spark.indexer.files_table import FilesTable
 
     tune_session(spark)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w15_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base, _ = gate_workdir("fis_w15")
 
     t = FilesTable(spark, os.path.join(base, "db"), buckets=16, keep_history=True)
     orig = files_df(spark, sf_dir)
@@ -515,17 +500,12 @@ def w16_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     missed the mutations, replayed the wrong generation, or moved any
     data (the commit is metadata-only: it re-references generation 1's
     immutable dirs verbatim) hash-mismatches."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from file_indexer_spark.indexer.files_table import FilesTable
 
     tune_session(spark)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w16_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base, _ = gate_workdir("fis_w16")
 
     t = FilesTable(spark, os.path.join(base, "db"), buckets=16, keep_history=True)
     orig = files_df(spark, sf_dir)
@@ -547,15 +527,8 @@ def w17_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer for lakes standardized on ORC/Hive). The oracle is the plain
     files derivation, so any type mapping or timestamp-precision drift
     through the ORC writer/reader hash-mismatches."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     tune_session(spark)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w17_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base, _ = gate_workdir("fis_w17")
     files = files_df(spark, sf_dir)
     files.write.mode("overwrite").orc(base)
     back = spark.read.schema(files.schema).orc(base)
@@ -574,15 +547,8 @@ def w18_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive (CSV's classic silent-corruption trap: by default an empty
     field reads back as null OR "" depending on writer/reader pairing).
     The oracle is the plain files derivation."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     tune_session(spark)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"fis_w18_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base, _ = gate_workdir("fis_w18")
     files = files_df(spark, sf_dir)
     fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
     (

@@ -622,7 +622,7 @@ def e18_deadline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from file_indexer_spark.registry_core import _land_arrivals  # noqa: E402
-from file_indexer_spark.registry_core import _stream_workdir  # noqa: E402
+from file_indexer_spark.landing import gate_workdir  # noqa: E402
 from file_indexer_spark.tables import events_df  # noqa: E402
 
 
@@ -644,7 +644,7 @@ def st15_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.streaming import windows as sw
 
     tune_session(spark)
-    base, _ = _stream_workdir("fis_st15", sf_dir)
+    base, _ = gate_workdir("fis_st15")
     src = os.path.join(base, "src")
     out = os.path.join(base, "changelog")
     ev2 = events_df(spark, sf_dir)

@@ -384,10 +384,8 @@ def sp13_source_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -------------------------------------------------------------- st16
 
-from file_indexer_spark.registry_core import (  # noqa: E402
-    _land_arrivals,
-    _stream_workdir,
-)
+from file_indexer_spark.landing import gate_workdir, land_tables  # noqa: E402
+from file_indexer_spark.registry_core import _land_arrivals  # noqa: E402
 
 
 @register("st16_streaming_drift", ORACLES["ct6_distribution_drift"])
@@ -407,7 +405,7 @@ def st16_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tune_session(spark)
-    base, tag = _stream_workdir("fis_st16", sf_dir)
+    base, _ = gate_workdir("fis_st16")
     src, out = os.path.join(base, "src"), os.path.join(base, "log")
     docs = _table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     mid = docs.agg(F.max("doc_id")).first()[0] // 2
@@ -433,12 +431,10 @@ def dd19_incremental_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vertex program over the AFFECTED COMPONENTS only. Output is
     the whole corpus's rank table, provably identical to dd18
     recomputed from scratch — gated by dd18's oracle VERBATIM."""
-    import os
-
     docs = _table(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 10 == 7)
     base = docs.filter(F.col("doc_id") % 10 != 7)
-    workdir, _ = _stream_workdir("fis_dd19", sf_dir)
+    workdir, _ = gate_workdir("fis_dd19")
 
     # compute-once discipline INSIDE the build too: materialize the
     # index tables first, then derive the pair list from the RE-READ
@@ -446,28 +442,20 @@ def dd19_incremental_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # machinery runs ONCE — previously the pair list re-signed the
     # corpus a second time for rows the stored tables already
     # determine), and assignment/ranks from the re-read pairs
-    mats: dict[str, DataFrame] = {}
-
-    def mat(name: str, df: DataFrame) -> DataFrame:
-        path = os.path.join(workdir, name)
-        df.write.mode("overwrite").parquet(path)
-        mats[name] = spark.read.parquet(path)
-        return mats[name]
-
-    for name, df in dd.lsh_index_tables(base).items():
-        mat(name, df)
-    mat("pairs", dd.lsh_pairs_from_tables(mats))
+    mats = dd.write_lsh_index(spark, base, workdir)
+    mats |= land_tables(spark, {"pairs": dd.lsh_pairs_from_tables(mats)}, workdir)
     # round-13 (guide §2.6): assignment and rank builds both read ONLY
     # the just-landed pairs parquet — independent multi-round programs,
-    # so their jobs overlap from driver threads instead of serializing
+    # so each is built on its own landing thread instead of serializing
     # two iteration tails
-    from file_indexer_spark.parallel import run_parallel
-
-    run_parallel(
-        [
-            lambda: mat("assignments", dd.dedup_clusters(base, mats["pairs"])),
-            lambda: mat("ranks", gr.pagerank(base, mats["pairs"])),
-        ]
+    pairs = mats["pairs"]
+    mats |= land_tables(
+        spark,
+        {
+            "assignments": lambda: dd.dedup_clusters(base, pairs),
+            "ranks": lambda: gr.pagerank(base, pairs),
+        },
+        workdir,
     )
     # round-13 (guide §5): the dd12 probe feeds BOTH the cluster
     # refresh and the rank refresh; each cuts its new_pairs argument

@@ -28,12 +28,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from file_indexer_spark.landing import gate_workdir
 from file_indexer_spark.operators import text as tx
 from file_indexer_spark.registry_core import (  # noqa: F401
     ORACLES,
     QUERIES,
     _land_arrivals,
-    _stream_workdir,
     _table,
     register,
 )
@@ -63,7 +63,7 @@ def t16_bm25_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings); the corpus text is never touched after the build."""
     tune_session(spark)
     docs = _table(spark, sf_dir, "documents")
-    workdir, _ = _stream_workdir("fis_t16", sf_dir)
+    workdir, _ = gate_workdir("fis_t16")
     mats = _write_bm25_index(spark, docs, workdir)
     return tx.bm25_topk_from_index(mats)
 
@@ -83,7 +83,7 @@ def t17_bm25_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _table(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 10 != 7)
     new = docs.filter(F.col("doc_id") % 10 == 7)
-    workdir, _ = _stream_workdir("fis_t17", sf_dir)
+    workdir, _ = gate_workdir("fis_t17")
     mats = _write_bm25_index(spark, base, workdir)
     merged = tx.bm25_append(mats, new)
     return tx.bm25_topk_from_index(merged)
@@ -114,7 +114,7 @@ def st17_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.tables import events_df
 
     tune_session(spark)
-    base, _ = _stream_workdir("fis_st17", sf_dir)
+    base, _ = gate_workdir("fis_st17")
     src, out = os.path.join(base, "src"), os.path.join(base, "log")
     events = events_df(spark, sf_dir)
     mid = events.agg(F.max("event_id")).first()[0] // 2
@@ -251,7 +251,7 @@ def w19_constraint_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.indexer.quality import classify_files, split_valid
 
     tune_session(spark)
-    workdir, _ = _stream_workdir("fis_w19", sf_dir)
+    workdir, _ = gate_workdir("fis_w19")
 
     base = files_df(spark, sf_dir)
     dirty = _w19_corrupted_base(base).unionByName(_w19_dup_rows(base))

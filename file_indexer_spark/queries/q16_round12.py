@@ -25,12 +25,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from file_indexer_spark.landing import gate_workdir, land_tables
 from file_indexer_spark.operators import text as tx
 from file_indexer_spark.registry_core import (  # noqa: F401
     ORACLES,
     QUERIES,
     _land_arrivals,
-    _stream_workdir,
     _table,
     register,
 )
@@ -67,7 +67,7 @@ def t17b_bm25_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("text")),
     )
     batch = docs.filter(slot.isin(3, 7))
-    workdir, _ = _stream_workdir("fis_t17b", sf_dir)
+    workdir, _ = gate_workdir("fis_t17b")
     mats = tx.write_bm25_index(spark, tx.bm25_index_tables(stale), workdir)
     merged = tx.bm25_upsert(mats, batch)
     return tx.bm25_topk_from_index(merged)
@@ -94,7 +94,7 @@ def t18_bm25_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _table(spark, sf_dir, "documents")
     slot = F.col("doc_id") % 10
     base = docs.filter(~slot.isin(7, 8, 9))
-    workdir, _ = _stream_workdir("fis_t18", sf_dir)
+    workdir, _ = gate_workdir("fis_t18")
     mats = tx.write_bm25_index(
         spark, tx.bm25_index_tables(base), os.path.join(workdir, "base")
     )
@@ -166,13 +166,13 @@ def dd21_ppr_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _table(spark, sf_dir, "embeddings")
     corpus = emb.select("vec_id")
     knn = sim.knn_join(emb, ordered=False).localCheckpoint(eager=False)
-    workdir, _ = _stream_workdir("fis_dd21", sf_dir)
-    stored_path = os.path.join(workdir, "ranks")
-    gr.personalized_pagerank(
-        knn, corpus, seed_max=gr.PPR_SEED_MAX_OLD
-    ).write.mode("overwrite").parquet(stored_path)
-    stored = spark.read.parquet(stored_path)
-    return gr.personalized_pagerank_refresh(knn, corpus, stored)
+    workdir, _ = gate_workdir("fis_dd21")
+    stored = land_tables(
+        spark,
+        {"ranks": gr.personalized_pagerank(knn, corpus, seed_max=gr.PPR_SEED_MAX_OLD)},
+        workdir,
+    )
+    return gr.personalized_pagerank_refresh(knn, corpus, stored["ranks"])
 
 
 # ------------------------------------------------------------- st18
@@ -207,7 +207,7 @@ def st18_streaming_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_indexer_spark.tables import files_df
 
     tune_session(spark)
-    workdir, _ = _stream_workdir("fis_st18", sf_dir)
+    workdir, _ = gate_workdir("fis_st18")
     base = files_df(spark, sf_dir)
     corrupted = _w19_corrupted_base(base)
     # split the corrupted base in two by a path hash (filename may be

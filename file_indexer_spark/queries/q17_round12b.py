@@ -20,13 +20,13 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F
 
 from file_indexer_spark.functions import hashing as H
+from file_indexer_spark.landing import gate_workdir, land_tables
 from file_indexer_spark.operators import curation as cu
 from file_indexer_spark.operators import graph as gr
 from file_indexer_spark.registry_core import (  # noqa: F401
     ORACLES,
     QUERIES,
     _land_arrivals,
-    _stream_workdir,
     _table,
     register,
 )
@@ -54,7 +54,7 @@ def t19_streaming_lexical_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune_session(spark)
     docs = _table(spark, sf_dir, "documents")
-    base, _ = _stream_workdir("fis_t19", sf_dir)
+    base, _ = gate_workdir("fis_t19")
     src = os.path.join(base, "src")
     state = os.path.join(base, "state")
     slot = F.col("doc_id") % 10
@@ -98,7 +98,7 @@ def dd23_lp_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     emb = _table(spark, sf_dir, "embeddings")
     base_emb = emb.filter(F.col("vec_id") % 10 != 7)
-    workdir, _ = _stream_workdir("fis_dd23", sf_dir)
+    workdir, _ = gate_workdir("fis_dd23")
     # round-13 optimization (guide §2.3/§5): the gate builds the kNN
     # graph twice (base for the stored tables, union for the refresh);
     # knn_join_two_sets scores the shared within-list pairs ONCE and
@@ -108,17 +108,13 @@ def dd23_lp_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     knn_base, knn_union = sim.knn_join_two_sets(emb, base_emb)
     knn_base = knn_base.localCheckpoint(eager=False)
     knn_union = knn_union.localCheckpoint(eager=False)
-    edges_path = os.path.join(workdir, "edges")
-    labels_path = os.path.join(workdir, "labels")
-    gr.lp_edges(knn_base).write.mode("overwrite").parquet(edges_path)
-    gr.label_propagation(
-        knn_base, base_emb.select("vec_id")
-    ).write.mode("overwrite").parquet(labels_path)
+    # edges and labels share knn_base's checkpoint: one landing each
+    stored = land_tables(spark, {"edges": gr.lp_edges(knn_base)}, workdir)
+    stored |= land_tables(
+        spark, {"labels": gr.label_propagation(knn_base, base_emb.select("vec_id"))}, workdir
+    )
     return gr.label_propagation_refresh(
-        knn_union,
-        emb.select("vec_id"),
-        spark.read.parquet(edges_path),
-        spark.read.parquet(labels_path),
+        knn_union, emb.select("vec_id"), stored["edges"], stored["labels"]
     )
 
 

@@ -22,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F
 
+from file_indexer_spark.landing import gate_workdir
 from file_indexer_spark.operators import similarity as sim
 from file_indexer_spark.operators import text as tx
 from file_indexer_spark.queries.q04_dedup_sim import _DUCK_DOT, _DUCK_NORMS
@@ -29,7 +30,6 @@ from file_indexer_spark.queries.q10_pq_crossmodal import _DUCK_SLICE_D2
 from file_indexer_spark.registry_core import (  # noqa: F401
     ORACLES,
     QUERIES,
-    _stream_workdir,
     _table,
     register,
 )
@@ -172,7 +172,7 @@ def _sim17_edited_index(
     query batch)."""
     emb = _table(spark, sf_dir, "embeddings")
     base = emb.filter(F.expr(_EDIT_BASE))
-    workdir, _ = _stream_workdir(tag, sf_dir)
+    workdir, _ = gate_workdir(tag)
     mats = sim.write_ivfpq_index(
         spark, sim.ivfpq_index_tables(base), os.path.join(workdir, "base")
     )
@@ -269,7 +269,7 @@ def t21_phrase_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     phrase query from the re-reads only.  At 100 TB the serve path
     reads O(postings of the phrase terms) row-group-pruned; the corpus
     text is tokenized exactly once per snapshot."""
-    base, _ = _stream_workdir("fis_t21", sf_dir)
+    base, _ = gate_workdir("fis_t21")
     mats = tx.write_positional_index(
         spark,
         tx.positional_index_tables(_table(spark, sf_dir, "documents")),
@@ -361,7 +361,7 @@ def st19_cdc_dense_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune_session(spark)
     emb = _table(spark, sf_dir, "embeddings")
-    base, _ = _stream_workdir("fis_st19", sf_dir)
+    base, _ = gate_workdir("fis_st19")
     src = os.path.join(base, "src")
     state = os.path.join(base, "state")
     up = F.lit("upsert").alias("op")
@@ -466,7 +466,7 @@ def t22_phrase_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("text")),
     )
     batch = docs.filter(slot.isin(3, 7))
-    workdir, _ = _stream_workdir("fis_t22", sf_dir)
+    workdir, _ = gate_workdir("fis_t22")
     mats = tx.write_positional_index(
         spark, tx.positional_index_tables(stale), workdir
     )
@@ -482,7 +482,7 @@ def t23_phrase_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the phrase query serves from the compacted layout."""
     docs = _table(spark, sf_dir, "documents")
     slot = F.col("doc_id") % 10
-    workdir, _ = _stream_workdir("fis_t23", sf_dir)
+    workdir, _ = gate_workdir("fis_t23")
     mats = tx.write_positional_index(
         spark,
         tx.positional_index_tables(docs.filter(~slot.isin(7, 8, 9))),

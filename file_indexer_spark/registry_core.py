@@ -9,15 +9,9 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from file_indexer_spark.operators import duplicates as dup
-from file_indexer_spark.operators import events as ev
-from file_indexer_spark.operators import search as srch
-from file_indexer_spark.operators import stats as st
-from file_indexer_spark.operators import text as tx
 from file_indexer_spark.session import tune_session
-from file_indexer_spark.tables import events_df, files_df, load_table, with_files_cte
+from file_indexer_spark.tables import events_df, files_df, load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -50,47 +44,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events_df(spark, sf_dir)
 
 
-
-
 # -- streaming fixture helpers (used by several parts) -----------
-
-def _stream_workdir(prefix: str, sf_dir: str) -> tuple[str, str]:
-    """Fresh per-(query, sf) scratch dir + a tag for memory-sink names."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
-    return base, tag
-
-
-def _mat_tables(
-    spark: SparkSession, tables: dict[str, DataFrame], workdir: str
-) -> dict[str, DataFrame]:
-    """Gate-build helper: write each table to parquet under
-    ``workdir/<name>`` and return the re-reads, OVERLAPPING the writes
-    from driver threads (guide §2.6, round-13 optimization). Callers
-    must pass INDEPENDENT tables only — frames sharing an
-    unmaterialized localCheckpoint (e.g. lsh bands + shingle sets,
-    which share the checkpointed shingle frame) must keep sequential
-    writes so the checkpoint materializes once."""
-    import os
-
-    from file_indexer_spark.parallel import run_parallel
-
-    def write_one(item):
-        name, df = item
-        path = os.path.join(workdir, name)
-        df.write.mode("overwrite").parquet(path)
-        return name, spark.read.parquet(path)
-
-    items = list(tables.items())
-    return dict(run_parallel([lambda it=it: write_one(it) for it in items]))
-
 
 def _land_arrivals(src: str, dfs) -> None:
     """Write each DataFrame as one parquet 'arrival' file and pin

@@ -36,6 +36,8 @@ from file_indexer_spark.operators.stats import (
 # ``coalesce`` to more partitions than a frame has keeps the ones it
 # has; see ``observed_page`` for why the page query wants that no-op.
 _KEEP_PARTITIONS = 2**31 - 1
+# Spark holds a page's ``offset + limit`` in a 32-bit int.
+_MAX_PAGE_END = 2**31 - 1
 
 
 @dataclass
@@ -59,6 +61,8 @@ def observed_page(
     ``offset + limit`` rows and the totals would count just those."""
     if limit < 1 or offset < 0:
         raise ValueError("limit must be >= 1 and offset >= 0")
+    if offset + limit > _MAX_PAGE_END:
+        raise ValueError(f"offset + limit must be <= {_MAX_PAGE_END}")
     obs = Observation()
     page = (
         df.observe(obs, *(agg.alias(name) for name, agg in totals.items()))

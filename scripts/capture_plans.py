@@ -5,7 +5,7 @@ $SPARK_GRAFT_PLANS_ROUND, default r13).
 Usage:
     python scripts/capture_plans.py <tag> [query ...]
 
-With no query names, captures the default optimization target set.
+With no query names, captures bench.py's headline set.
 Gate functions that materialize intermediates during CONSTRUCTION
 (dd12/dd13/x2/...) execute those writes here too — the captured plan is
 the plan of the RETURNED DataFrame, which is what the bench times.
@@ -18,28 +18,14 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
+from bench import HEADLINE  # noqa: E402
 from file_indexer_spark import registry  # noqa: E402
 from file_indexer_spark.session import get_spark  # noqa: E402
-
-DEFAULT = [
-    # headline set
-    "d5_duplicates_report",
-    "j2_duplicate_groups",
-    "j3_duplicate_groups_pattern",
-    "a1_database_stats",
-    "a9_size_histogram",
-    "a10_extension_stats",
-    "a11_modification_timeline",
-    "a12_duplicate_groups_nested",
-    "a7b_phase2_files_to_hash",
-    "p1_search_multidim",
-    "p2_search_recency_page",
-]
 
 
 def main() -> None:
     tag = sys.argv[1]
-    names = sys.argv[2:] or DEFAULT
+    names = sys.argv[2:] or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     rnd = os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r13")
     out_dir = os.path.join(

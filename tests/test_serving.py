@@ -178,6 +178,16 @@ def test_empty_pages_report_totals_and_return(svc):
         sv.paginate(svc.files, ["path"], limit=0)
 
 
+def test_page_end_past_int32_is_refused(svc):
+    """Spark holds offset + limit in a 32-bit int: a page ending past
+    2**31 - 1 is a ValueError, not an AnalysisException or a Py4JError."""
+    for offset in (2**31 - 50, 2**31):
+        with pytest.raises(ValueError, match="offset \\+ limit"):
+            svc.search(sv.SearchRequest(offset=offset, limit=100))
+        with pytest.raises(ValueError, match="offset \\+ limit"):
+            svc.duplicates(sv.DuplicatesRequest(offset=offset, limit=100))
+
+
 def test_empty_snapshot(spark, sf_smoke):
     """Every request over an empty catalog answers with zero totals; the
     stats row rolls its per-checksum groups up to 0, not NULL."""
