@@ -1269,7 +1269,7 @@ def main_stream_ingest() -> None:
     # st18: the constraint-quarantine MERGE front-end over the w19
     # corrupted feed (classify + cross-batch PK arbitration + bucketed
     # partial upsert + quarantine append per micro-batch)
-    from file_indexer_spark.queries.q15_round11 import (
+    from file_indexer_spark.queries.shared import (
         _w19_corrupted_base,
         _w19_dup_rows,
     )

@@ -1,1 +1,2 @@
-"""Per-pillar query registration modules (split of registry.py)."""
+"""Query registrations, one module per operator domain; ``shared``
+holds the oracle fragments and feeds that more than one domain uses."""

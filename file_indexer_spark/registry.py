@@ -1,9 +1,11 @@
 """Query registry: every implemented operator as a (spark, sf_dir) ->
 DataFrame callable, paired with an equivalent DuckDB oracle SQL string.
 
-This is the driver contract (see /root/repo/__spark_entry__.py) and the
-coverage ledger for SURVEY.md §2 — keys are prefixed with the survey
-operator IDs they implement.
+This is the driver contract (see __spark_entry__.py) and the coverage
+ledger for SURVEY.md §2 — keys are prefixed with the survey operator
+IDs they implement. Each domain module under ``queries/`` registers one
+family set; shared oracle fragments live in ``queries/shared.py``, which
+imports no query module, so the domain modules load in any order.
 
 Determinism rules (oracle hash-matches are order-insensitive but value-
 and schema-sensitive):
@@ -12,37 +14,30 @@ and schema-sensitive):
   * DuckDB SUM(BIGINT) returns HUGEINT — oracles cast back to BIGINT
     to match Spark's LongType;
   * no CURRENT_DATE / now() — fixed timestamps only.
+
+Bounds companions (``*_bounds``) are driver-checkable tolerance
+contracts for the rows-only operators: each computes its operator's
+VIOLATION SET in Spark (sketch/MLlib output joined against its exact
+deterministic twin, operators/bounds.py) and gates it against an EMPTY
+oracle of the same schema, so a contract break emits rows and fails the
+gate. tests/test_bounds.py proves each companion is non-vacuous.
 """
 
-
-from file_indexer_spark.registry_core import (  # noqa: F401
+from file_indexer_spark.queries import (  # noqa: F401  (import registers)
+    catalog,
+    curation,
+    dedup,
+    events,
+    media,
+    relational,
+    sampling,
+    similarity,
+    streaming,
+    text,
+    writes,
+)
+from file_indexer_spark.registry_core import (  # noqa: F401  (re-exports)
     ORACLES,
     QUERIES,
-    QueryFn,
-    _events,
-    _files,
     _land_arrivals,
-    _table,
-    register,
 )
-
-# Load order matters: later parts import shared SQL fragments from the
-# parts that define them.
-from file_indexer_spark.queries import q01_files  # noqa: E402, F401
-from file_indexer_spark.queries import q02_text  # noqa: E402, F401
-from file_indexer_spark.queries import q03_events  # noqa: E402, F401
-from file_indexer_spark.queries import q04_dedup_sim  # noqa: E402, F401
-from file_indexer_spark.queries import q05_media_write_stream  # noqa: E402, F401
-from file_indexer_spark.queries import q06_ddmat_sampling  # noqa: E402, F401
-from file_indexer_spark.queries import q07_curation_relational  # noqa: E402, F401
-from file_indexer_spark.queries import q08_round4plus  # noqa: E402, F401
-from file_indexer_spark.queries import q09_bounds  # noqa: E402, F401
-from file_indexer_spark.queries import q10_pq_crossmodal  # noqa: E402, F401
-from file_indexer_spark.queries import q11_round9  # noqa: E402, F401
-from file_indexer_spark.queries import q12_round9b  # noqa: E402, F401
-from file_indexer_spark.queries import q13_round9c  # noqa: E402, F401
-from file_indexer_spark.queries import q14_round10  # noqa: E402, F401
-from file_indexer_spark.queries import q15_round11  # noqa: E402, F401
-from file_indexer_spark.queries import q16_round12  # noqa: E402, F401
-from file_indexer_spark.queries import q17_round12b  # noqa: E402, F401
-from file_indexer_spark.queries import q18_round12c  # noqa: E402, F401

@@ -1,17 +1,15 @@
 """Registry core: the register() mechanism, the QUERIES/ORACLES
-dicts, and the shared per-query helpers (tuned table loaders and
-the streaming-fixture writers). Query registrations live in
-file_indexer_spark/queries/* and are loaded by the registry
-facade in order."""
+dicts, and the streaming-fixture writer. Query registrations live in
+file_indexer_spark/queries/* and are loaded by the registry facade."""
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from file_indexer_spark.session import tune_session
-from file_indexer_spark.tables import events_df, files_df, load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -20,31 +18,27 @@ ORACLES: dict[str, str] = {}
 
 
 def register(name: str, oracle: str | None = None):
+    """Register a query under ``name``, paired with its DuckDB
+    ``oracle`` (None = rows-only). The registered callable applies
+    ``tune_session`` before every call, so no query depends on another
+    having tuned the caller's session first (UTC time zone, nanosecond
+    event timestamps read as longs)."""
+
     def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            tune_session(spark)
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = tuned
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return tuned
 
     return deco
 
 
-def _files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
-    return files_df(spark, sf_dir)
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_session(spark)
-    return load_table(spark, sf_dir, name)
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
-    return events_df(spark, sf_dir)
-
-
-# -- streaming fixture helpers (used by several parts) -----------
+# -- streaming fixture helper (used by several domains) ----------
 
 def _land_arrivals(src: str, dfs) -> None:
     """Write each DataFrame as one parquet 'arrival' file and pin

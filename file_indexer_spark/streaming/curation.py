@@ -122,10 +122,10 @@ def curation_stream(stream: DataFrame, bench_shingles: list[int]) -> DataFrame:
     )
 
 
-def run_to_memory_sink(stream_df: DataFrame, table_name: str) -> None:
+def run_to_memory_sink(stream_df: DataFrame, table_name: str) -> DataFrame:
     from file_indexer_spark.streaming.util import run_to_memory_sink as _run
 
-    _run(stream_df, table_name, output_mode="append")
+    return _run(stream_df, table_name, output_mode="append")
 
 
 def curation_accounting(raw_docs: DataFrame, decisions: DataFrame) -> DataFrame:

@@ -67,7 +67,7 @@ def dedup_stream_bounded(stream: DataFrame, watermark: str = "1 hour") -> DataFr
     )
 
 
-def run_to_memory_sink(stream_df: DataFrame, table_name: str) -> None:
+def run_to_memory_sink(stream_df: DataFrame, table_name: str) -> DataFrame:
     from file_indexer_spark.streaming.util import run_to_memory_sink as _run
 
-    _run(stream_df, table_name, output_mode="append")
+    return _run(stream_df, table_name, output_mode="append")

@@ -113,9 +113,10 @@ def dropped_by_watermark_total(query) -> int:
     return total
 
 
-def run_to_memory_sink(stream_df: DataFrame, table_name: str):
-    """Drain everything currently available into an in-memory table and
-    stop (complete mode: windowed aggs re-emit full state)."""
+def run_to_memory_sink(stream_df: DataFrame, table_name: str) -> DataFrame:
+    """Drain everything currently available into an in-memory table,
+    stop, and return its rows (complete mode: windowed aggs re-emit
+    full state)."""
     from file_indexer_spark.streaming.util import run_to_memory_sink as _run
 
     return _run(stream_df, table_name, output_mode="complete")

@@ -664,10 +664,30 @@ def test_knn_join_refresh_matches_scratch(embeddings):
 
     import pytest
 
-    with pytest.raises(ValueError):
-        sim.knn_join_refresh(
-            embeddings, base, stored, stored_assignments=stored_assign
-        )
+    # stored assignments need the frozen centroids AND the pinned regime
+    for pinned in ({}, {"centroids": cents}):
+        with pytest.raises(ValueError):
+            sim.knn_join_refresh(
+                embeddings, base, stored, stored_assignments=stored_assign, **pinned
+            )
+
+
+def test_knn_join_refresh_rejects_a_base_vector_missing_from_the_union(embeddings):
+    """Additions only: a base vec_id that the union lacks would leave its
+    stale stored rows in the refreshed graph, so the refresh's job fails
+    instead (in plan, no extra job)."""
+    from pyspark.sql import functions as F
+
+    base = embeddings.filter(F.col("vec_id") % 10 != 7)
+    gone = (
+        embeddings.filter(F.col("vec_id") == 0)
+        .withColumn("vec_id", F.lit(10**6).cast(embeddings.schema["vec_id"].dataType))
+    )
+    base = base.unionByName(gone)
+    stored = sim.knn_join(base, ordered=False).localCheckpoint()
+    refreshed = sim.knn_join_refresh(embeddings, base, stored)
+    with pytest.raises(Exception, match="missing from embeddings"):
+        refreshed.collect()
 
 
 def test_daily_uniques_approx_matches_exact_within_rsd(spark, sf_oracle):

@@ -27,10 +27,10 @@ def events_dir(spark, sf_smoke, tmp_path):
 def test_windowed_counts_matches_batch(spark, sf_smoke, events_dir):
     stream = sw.read_events_stream(spark, events_dir)
     assert stream.isStreaming
-    sw.run_to_memory_sink(sw.windowed_counts(stream), "win_counts")
+    drained = sw.run_to_memory_sink(sw.windowed_counts(stream), "win_counts")
     got = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM win_counts").collect()
+        for r in drained.collect()
     }
     batch = sw.windowed_counts(events_df(spark, sf_smoke))
     want = {
@@ -187,9 +187,23 @@ def test_streaming_dedup_filters_rearrivals_across_batches(spark, tmp_path):
 
     stream = sd.read_docs_stream(spark, src, max_files_per_trigger=1)
     assert stream.isStreaming
-    sd.run_to_memory_sink(sd.dedup_stream(stream), "st4_test_sink")
-    rows = [r["content_hash"] for r in spark.table("st4_test_sink").collect()]
+    drained = sd.run_to_memory_sink(sd.dedup_stream(stream), "st4_test_sink")
+    rows = [r["content_hash"] for r in drained.collect()]
     assert len(rows) == 3 and len(set(rows)) == 3  # aaa, bbb, ccc — each once
+
+
+def test_memory_sink_gates_leave_no_view(spark, sf_smoke):
+    """A memory-sink gate drops its per-call sink view once it holds the
+    drained rows: three st4 calls leave no ``st4_sink_*`` table in the
+    catalog, and each returned frame still collects the same rows."""
+    from file_indexer_spark import registry
+
+    st4 = registry.QUERIES["st4_streaming_dedup"]
+    frames = [st4(spark, sf_smoke) for _ in range(3)]
+    left = [t.name for t in spark.catalog.listTables() if t.name.startswith("st4_sink_")]
+    assert left == [], left
+    rows = [sorted(tuple(r) for r in f.collect()) for f in frames]
+    assert rows[0] and rows[0] == rows[1] == rows[2]
 
 
 def test_streaming_uniques_equal_batch_sketch(spark, sf_smoke):
@@ -244,8 +258,8 @@ def test_streaming_curation_matches_batch_pipeline(spark, tmp_path):
     bench = sc.bench_shingle_set(docs)
     stream = sc.read_source_docs_stream(spark, src_dir, max_files_per_trigger=1)
     assert stream.isStreaming
-    sc.run_to_memory_sink(sc.curation_stream(stream, bench), "st7_sink")
-    got = sc.curation_accounting(docs, spark.table("st7_sink")).collect()
+    drained = sc.run_to_memory_sink(sc.curation_stream(stream, bench), "st7_sink")
+    got = sc.curation_accounting(docs, drained).collect()
     want = curation_pipeline(docs).collect()
     assert [r.asDict() for r in got] == [r.asDict() for r in want]
     # the funnel actually funnels on this corpus
@@ -296,8 +310,8 @@ def test_bounded_dedup_state_readmits_past_watermark(spark, tmp_path):
         spark.readStream.format("parquet").schema(schema)
         .option("maxFilesPerTrigger", 1).load(src)
     )
-    sd.run_to_memory_sink(sd.dedup_stream_bounded(stream), "st4b_sink")
-    hashes = [r["content_hash"] for r in spark.table("st4b_sink").collect()]
+    drained = sd.run_to_memory_sink(sd.dedup_stream_bounded(stream), "st4b_sink")
+    hashes = [r["content_hash"] for r in drained.collect()]
     import hashlib
 
     aaa = hashlib.md5(b"aaa").hexdigest()
@@ -347,11 +361,8 @@ def test_stream_stream_interval_join_matches_across_batches(spark, tmp_path):
     sjoins_df = sjoins.view_purchase_pairs(stream)
     from file_indexer_spark.streaming.util import run_to_memory_sink
 
-    run_to_memory_sink(sjoins_df, "st9t_sink")
-    got = {
-        (r["purchase_id"], r["view_id"])
-        for r in spark.table("st9t_sink").collect()
-    }
+    drained = run_to_memory_sink(sjoins_df, "st9t_sink")
+    got = {(r["purchase_id"], r["view_id"]) for r in drained.collect()}
     assert got == {(4, 1), (6, 3)}, got
 
 
@@ -384,10 +395,10 @@ def test_stream_stream_outer_join_delays_nulls_until_watermark(spark, tmp_path):
     stream = sw.read_events_stream(spark, src, max_files_per_trigger=1)
     from file_indexer_spark.streaming.util import run_to_memory_sink
 
-    run_to_memory_sink(sjoins.view_purchase_pairs_outer(stream), "st10t_sink")
+    drained = run_to_memory_sink(sjoins.view_purchase_pairs_outer(stream), "st10t_sink")
     got = {
         (r["purchase_id"], r["view_id"])
-        for r in spark.table("st10t_sink").filter("user_id >= 0").collect()
+        for r in drained.filter("user_id >= 0").collect()
     }
     assert got == {(2, 1), (3, None)}, got
 
