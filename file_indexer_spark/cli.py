@@ -11,9 +11,14 @@ table:
     stats      --db DIR
     cleanup    --db DIR
     sql        --db DIR --sf-dir DIR "SELECT ..."
+    warmup
 
 Commands are thin wrappers over the engine modules; everything here is
-argument plumbing and console formatting.
+argument plumbing and console formatting. ``warmup`` starts a session
+and runs a tiny index and one request of each serving type; the first
+session on a JDK + Spark install runs it in a child process whose JVM
+dumps the driver's class-data-sharing archive (``session.get_spark``),
+and running it by hand builds that archive ahead of time.
 """
 
 from __future__ import annotations
@@ -97,6 +102,10 @@ def _build_parser() -> argparse.ArgumentParser:
     p_sql.add_argument("--sf-dir", default=None, help="test-table dir to register as views")
     p_sql.add_argument("query")
 
+    p_warm = sub.add_parser("warmup", help="run a tiny index and one request of each serving type")
+    # where the JVM dumps its classes at exit; passed by get_spark's archive build
+    p_warm.add_argument("dump_archive", nargs="?", help=argparse.SUPPRESS)
+
     return parser
 
 
@@ -104,18 +113,61 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
     args = _build_parser().parse_args(argv)
     own_spark = spark is None
     if own_spark:
-        from file_indexer_spark.session import get_spark
+        from file_indexer_spark.session import get_spark, stop_jvm
 
-        spark = get_spark("file_indexer_spark_cli")
+        if args.command == "warmup":
+            spark = get_spark("file_indexer_spark_warmup", shuffle_partitions=2, cpus=2,
+                              dump_archive=args.dump_archive)
+        else:
+            spark = get_spark("file_indexer_spark_cli")
     try:
         return _dispatch(args, spark)
     finally:
-        if own_spark:
+        if own_spark and args.command == "warmup":
+            stop_jvm(spark)  # a dumping JVM writes its archive on the way out
+        elif own_spark:
             spark.stop()
+
+
+def _warmup(spark: SparkSession) -> int:
+    """Index a 12-file tree, report on it, probe it for cleanup and serve
+    one search, duplicates, stats and visualization request from it."""
+    import tempfile
+
+    from file_indexer_spark.indexer.cleanup import probe_deleted_files
+    from file_indexer_spark.indexer.files_table import FilesTable
+    from file_indexer_spark.indexer.two_phase import two_phase_index
+    from file_indexer_spark.operators.duplicates import duplicate_groups_nested
+    from file_indexer_spark.operators.stats import database_stats
+    from file_indexer_spark.serving import DuplicatesRequest, FileIndexService, SearchRequest
+
+    with tempfile.TemporaryDirectory(prefix="fis-warmup-") as work:
+        root = os.path.join(work, "tree")
+        for d in range(3):
+            os.makedirs(os.path.join(root, f"d{d}"))
+            for f in range(4):
+                with open(os.path.join(root, f"d{d}", f"f{f}.txt"), "w") as fh:
+                    fh.write("same" if f < 2 else f"{d}-{f}" * (f + 1))
+        table = FilesTable(spark, os.path.join(work, "files_db"))
+        stats = two_phase_index(spark, table, root)
+        duplicate_groups_nested(table.read()).collect()
+        database_stats(table.read()).collect()
+        probe_deleted_files(table).count()
+        service = FileIndexService(table.read(), source_path=table.location)
+        service.search(SearchRequest(filename_pattern="%.txt"))
+        service.duplicates(DuplicatesRequest())
+        service.stats()
+        service.visualization()
+        service.files.unpersist()
+    print(f"warmup: {stats.files_inserted} files indexed, 4 requests served")
+    return 0
 
 
 def _dispatch(args: argparse.Namespace, spark: SparkSession) -> int:
     from file_indexer_spark.indexer.files_table import FilesTable
+
+    if args.command == "warmup":
+        return _warmup(spark)
 
     table = FilesTable(spark, args.db)
 
