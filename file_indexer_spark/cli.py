@@ -158,7 +158,7 @@ def _warmup(spark: SparkSession) -> int:
         service.duplicates(DuplicatesRequest())
         service.stats()
         service.visualization()
-        service.files.unpersist()
+        service.close()
     print(f"warmup: {stats.files_inserted} files indexed, 4 requests served")
     return 0
 

@@ -17,14 +17,17 @@ from __future__ import annotations
 import hashlib
 import os
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 CHUNK_SIZE = 64 * 1024  # reference indexer.py:38
 DEFAULT_MAX_CHECKSUM_SIZE = 100 * 1024 * 1024  # reference cli.py:69-70
+
+if TYPE_CHECKING:  # pandas runs on the executors; a driver that never hashes skips its import
+    import pandas as pd
 
 
 def hashing_off(max_checksum_size: int | None) -> bool:

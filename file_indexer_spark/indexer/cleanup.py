@@ -15,13 +15,16 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from file_indexer_spark.indexer.files_table import PK, FilesTable
 from file_indexer_spark.indexer.scan import scan_directory
+
+if TYPE_CHECKING:  # pandas runs on the executors; the driver skips its import
+    import pandas as pd
 
 
 def cleanup_deleted_files(
@@ -63,6 +66,8 @@ def probe_deleted_files(table: FilesTable) -> DataFrame:
     dirs = files.select("path").distinct()
 
     def probe_dirs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         for pdf in batches:
             yield pd.DataFrame(
                 {"path": pdf["path"], "dir_exists": [os.path.isdir(p) for p in pdf["path"]]}

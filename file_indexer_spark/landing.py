@@ -9,12 +9,17 @@ Every call gets a fresh ``tempfile.mkdtemp`` under one root per
 process, so two runs of one gate, back to back or at once, never
 delete each other's files: a DataFrame a gate returned keeps reading
 after the same gate runs again. The root lives under ``TMPDIR`` and is
-removed when the interpreter exits.
+removed when the interpreter exits. A killed process cannot do that,
+so its process holds an ``flock`` on ``<root>/.owner`` for its life,
+and the next root made under the same ``TMPDIR`` first removes every
+sibling root whose lock it can take. Unlike a pid, a lock is not
+fooled by pid reuse.
 """
 
 from __future__ import annotations
 
 import atexit
+import fcntl
 import functools
 import os
 import shutil
@@ -26,11 +31,47 @@ from pyspark.sql import DataFrame, SparkSession
 from file_indexer_spark.parallel import run_parallel
 
 
+_PREFIX = "fis_gates_"
+_owner_locks: list[int] = []  # held open: closing the fd would drop the lock
+
+
 @functools.cache
 def _root() -> str:
-    root = tempfile.mkdtemp(prefix="fis_gates_")
+    _remove_dead_roots(tempfile.gettempdir())
+    while True:
+        root = tempfile.mkdtemp(prefix=_PREFIX)
+        try:
+            fd = os.open(os.path.join(root, ".owner"), os.O_CREAT | os.O_WRONLY, 0o600)
+        except FileNotFoundError:  # another process's sweep took it before the lock
+            continue
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        if os.fstat(fd).st_nlink:
+            break
+        os.close(fd)  # locked only after a sweep had unlinked it
+    _owner_locks.append(fd)
     atexit.register(shutil.rmtree, root, True)
     return root
+
+
+def _remove_dead_roots(parent: str) -> None:
+    """Remove each gate root in ``parent`` whose owner lock can be taken:
+    its process died without its at-exit cleanup. A root with no
+    ``.owner`` file is left alone: it may be one still being made."""
+    for name in os.listdir(parent):
+        if not name.startswith(_PREFIX):
+            continue
+        root = os.path.join(parent, name)
+        try:
+            fd = os.open(os.path.join(root, ".owner"), os.O_RDONLY)
+        except OSError:
+            continue
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            shutil.rmtree(root, ignore_errors=True)
+        except OSError:
+            pass  # its owner is alive
+        finally:
+            os.close(fd)
 
 
 def gate_workdir(prefix: str) -> tuple[str, str]:

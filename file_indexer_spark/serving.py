@@ -11,17 +11,32 @@ TakeOrderedAndProject — no full materialization.
 ``FileIndexService`` serves every request from its own cached copy of
 the snapshot, coalesced to the partitions a scan of it would read: one
 up to ``spark.sql.files.maxPartitionBytes`` (128 MB by default). On one
-partition the planner needs no exchange for any aggregate, so a search,
-duplicates or visualization request is one Spark job and a stats
-request two.
+partition the planner needs no exchange for any aggregate, so a search
+or duplicates request is one Spark job.
+
+A cached snapshot cannot change, so the service derives once what its
+requests share. ``stats`` and ``visualization`` take no parameters:
+each is computed on its first call (two jobs and one) and answered
+from memory after that. ``duplicates`` reads a cached frame of the
+*duplicated rows*: the rows whose non-NULL checksum at least two rows
+share, found by a window count over ``checksum``, which plans no
+exchange on a one-partition snapshot. The first ``duplicates`` request
+fills it; adaptive execution runs each unfilled cache a plan reads as
+a stage of its own, so that request takes a few jobs and every later
+one takes one. The frame answers exactly as the whole snapshot would:
+a group holds at least two rows of one checksum, and the frame keeps
+every row of each checksum it keeps, so J3's per-checksum pattern flag
+sees the same rows, including a copy at another size.
 """
 
 from __future__ import annotations
 
+import copy
+import threading
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from file_indexer_spark.operators.duplicates import group_duplicates, group_order, scope_to_pattern
@@ -104,6 +119,17 @@ def _snapshot(files: DataFrame) -> DataFrame:
     return files.coalesce(max(n, 1))
 
 
+def _duplicated_rows(files: DataFrame) -> DataFrame:
+    """The rows of ``files`` whose non-NULL checksum at least two rows share."""
+    copies = F.count(F.lit(1)).over(Window.partitionBy("checksum"))
+    return (
+        files.filter(F.col("checksum").isNotNull())
+        .withColumn("_copies", copies)
+        .filter(F.col("_copies") > 1)
+        .drop("_copies")
+    )
+
+
 # --------------------------------------------------------------------
 # API-backend service contracts (reference api_backend/file_indexer_api:
 # routers.py:121-184 duplicates, :28-118 search; models.py:61-100).
@@ -178,7 +204,14 @@ API_VERSION = "0.1.0"  # reference main.py:80, routers.py:46
 class FileIndexService:
     """Read-side service over a ``files`` DataFrame: an immutable
     snapshot makes concurrent reads safe, the reference's
-    read-only-connection trick for free."""
+    read-only-connection trick for free.
+
+    With ``cache`` (the default) the service also keeps the state its
+    requests share: the ``stats`` and ``visualization`` answers, each
+    computed at most once, and the cached duplicated-rows frame that
+    ``duplicates`` reads (see the module docstring). With
+    ``cache=False`` the snapshot may change under the service, so every
+    request is computed from it. ``close`` releases the cached frames."""
 
     def __init__(self, files: DataFrame, cache: bool = True, source_path: str | None = None):
         # The service keeps its own copy of the snapshot, sized by bytes
@@ -186,9 +219,30 @@ class FileIndexService:
         # first reads memory, not parquet, in a plan with no exchange.
         snapshot = _snapshot(files)
         self.files = snapshot.cache() if cache else snapshot
+        self._duplicated = _duplicated_rows(self.files).cache() if cache else self.files
+        self._memo: dict | None = {} if cache else None
+        # one lock per answer: a first stats call never waits on a
+        # first visualization call
+        self._locks = {name: threading.Lock() for name in ("stats", "visualization")}
         # reference HealthCheck.database_path (models.py:158) — the
         # backing store's path; None is valid (in-memory snapshot)
         self.source_path = source_path
+
+    def _memoized(self, name: str, compute):
+        """``compute()``, run at most once per service when it caches;
+        each caller gets its own copy, free to mutate."""
+        if self._memo is None:
+            return compute()
+        with self._locks[name]:
+            if name not in self._memo:
+                self._memo[name] = compute()
+        return copy.deepcopy(self._memo[name])
+
+    def close(self) -> None:
+        """Drop the cached frames (the duplicated rows first: they are
+        read from the snapshot's cache)."""
+        self._duplicated.unpersist()
+        self.files.unpersist()
 
     def search(self, req: SearchRequest) -> Page:
         matches = search_matches(
@@ -206,7 +260,7 @@ class FileIndexService:
 
     def duplicates(self, req: DuplicatesRequest) -> DuplicatesResponse:
         base = scope_to_pattern(
-            self.files,
+            self._duplicated,
             req.filename_pattern,
             req.path_pattern,
             req.min_file_size,
@@ -233,14 +287,17 @@ class FileIndexService:
             has_more=req.offset + len(rows) < totals["total_groups"],
         )
 
-    def stats(self):
-        return database_stats(self.files).collect()[0].asDict()
+    def stats(self) -> dict:
+        return self._memoized("stats", lambda: database_stats(self.files).collect()[0].asDict())
 
     def visualization(self) -> dict:
         """The three chart tables the reference serves in one response
         (routers.py:204-215, database.py:459-550, models.py:147-152):
         size distribution bands, extension top-20, monthly timeline —
         the registered a9/a10/a11 operators, collected as one job."""
+        return self._memoized("visualization", self._charts)
+
+    def _charts(self) -> dict:
         rows = chart_rows(self.files).collect()
         out = {}
         for chart, (_, columns, order) in _CHARTS.items():

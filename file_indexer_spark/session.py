@@ -435,6 +435,8 @@ def get_spark(
     active = spark.conf.get("spark.driver.extraJavaOptions", "") or ""
     if GC_OPTS and GC_OPTS not in active:
         ignored.append(f"GC opts {GC_OPTS!r} (the running JVM has extraJavaOptions {active!r})")
+    elif GC_OPTS:
+        ignored += [f"GC opt {miss}" for miss in _vm_options_not_held(spark, GC_OPTS)]
     cache = spark.conf.get("spark.sql.codegen.cache.maxEntries")
     if cache != str(CODEGEN_CACHE_ENTRIES):
         ignored.append(f"spark.sql.codegen.cache.maxEntries={CODEGEN_CACHE_ENTRIES} "
@@ -450,6 +452,34 @@ def get_spark(
     if ignored:
         warnings.warn("NOT applied: " + "; ".join(ignored), stacklevel=2)
     return spark
+
+
+# a -XX option: +Name or -Name sets a flag, Name=value a value
+_XX_OPTION = re.compile(r"-XX:([+-]?)(\w+)(?:=(\S*))?")
+
+
+def _vm_options_not_held(spark: SparkSession, opts: str) -> list[str]:
+    """Each ``-XX`` option of ``opts`` that the running JVM does not hold,
+    and why. Spark's launcher adds ``-XX:+IgnoreUnrecognizedVMOptions``,
+    so a misspelled name still starts a JVM, without it."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+    missed = []
+    for match in _XX_OPTION.finditer(opts):
+        sign, name, value = match.groups()
+        want = {"+": "true", "-": "false"}.get(sign, value)
+        size = re.fullmatch(r"(\d+)([kmgt])", (want or "").lower())
+        if size:  # the JVM reports sizes in bytes
+            want = str(int(size.group(1)) * 1024 ** " kmgt".index(size.group(2)))
+        try:
+            have = bean.getVMOption(name).getValue()
+        except Exception:  # noqa: BLE001 - the bean raises for an unknown name
+            missed.append(f"{match.group(0)} (no such VM option)")
+            continue
+        if have != want:
+            missed.append(f"{match.group(0)} (the JVM has {name}={have})")
+    return missed
 
 
 def stop_jvm(spark: SparkSession, timeout_s: float = 120) -> None:

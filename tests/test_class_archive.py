@@ -192,6 +192,18 @@ def test_failed_build_warns_once_and_is_not_retried(tmp_path, monkeypatch):
     assert [n for n in os.listdir(os.path.dirname(archive.path)) if n.startswith("build-")] == []
 
 
+def test_misspelled_gc_option_is_reported(tmp_path):
+    """Spark's launcher adds -XX:+IgnoreUnrecognizedVMOptions, so a
+    misspelled flag starts a JVM without it: the session works, and its
+    one warning names the flag but not the options the JVM holds."""
+    opts = "-XX:+UseParalelGC -XX:MaxGCPauseMillis=150"
+    report = _report(_child(str(tmp_path / "xdg"), str(tmp_path), SPARK_GRAFT_GC_OPTS=opts))
+    assert report["rows"] == 3
+    [warning] = report["warnings"]
+    assert "GC opt -XX:+UseParalelGC (no such VM option)" in warning
+    assert "MaxGCPauseMillis" not in warning
+
+
 def test_real_conf_dir_skips_the_archive_and_is_honoured(tmp_path, monkeypatch):
     conf = tmp_path / "conf"
     conf.mkdir()

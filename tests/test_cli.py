@@ -263,6 +263,7 @@ def test_service_contracts(spark, sf_smoke):
 
     with _pytest.raises(NotImplementedError):
         create_app(files_df(spark, sf_smoke))
+    svc.close()
 
 
 def test_service_visualization_and_health(spark, sf_smoke):
@@ -295,3 +296,19 @@ def test_service_visualization_and_health(spark, sf_smoke):
         files_df(spark, sf_smoke), cache=False, source_path="/data/files"
     )
     assert svc2.health()["database_path"] == "/data/files"
+    svc.close()
+
+
+def test_cli_and_files_table_import_without_pandas():
+    """pandas runs on the executors only: importing the CLI or the files
+    table (every command does) must not pay for its import."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("import sys; import file_indexer_spark.cli, file_indexer_spark.indexer.files_table; "
+            "print(sorted(m for m in sys.modules if m.split('.')[0] == 'pandas'))")
+    out = subprocess.run([sys.executable, "-c", code], cwd=repo, check=True,
+                         capture_output=True, text=True, timeout=120).stdout
+    assert out.strip() == "[]"

@@ -37,7 +37,7 @@ def test_repeated_index_and_serve_reuse_generated_code(spark, tmp_path):
         service.stats()
         service.visualization()
         service.duplicates(DuplicatesRequest())
-        service.files.unpersist()
+        service.close()
 
     warm_sequence()
     warm_sequence()

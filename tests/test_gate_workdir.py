@@ -1,11 +1,13 @@
 """Gate scratch directories (file_indexer_spark/landing.py): every gate
 call writes under its own directory, so runs of one gate, back to back
 or at once, never delete each other's files, and a process leaves none
-of them behind when it exits."""
+of them behind when it exits; the root of a killed process is removed
+by the next process that makes one."""
 
 from __future__ import annotations
 
 import os
+import signal
 import subprocess
 import sys
 
@@ -53,4 +55,39 @@ def test_exiting_process_leaves_no_gate_dir(tmp_path, sf_smoke):
     root = out.strip().splitlines()[-1]
     assert os.path.dirname(root) == str(tmp_path)
     assert not os.path.exists(root)
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("fis_")]
+
+
+_ROOT_CHILD = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from file_indexer_spark import landing
+landing.gate_workdir("probe")
+print(landing._root(), flush=True)
+sys.stdin.readline()
+"""
+
+
+def test_root_of_a_killed_process_is_removed_by_the_next(tmp_path):
+    """SIGKILL skips the at-exit cleanup; the next process's first
+    gate_workdir removes that root and leaves a live sibling's alone."""
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+
+    def start():
+        child = subprocess.Popen([sys.executable, "-c", _ROOT_CHILD, REPO], env=env,
+                                 stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True)
+        return child, child.stdout.readline().strip()
+
+    killed, dead_root = start()
+    live, live_root = start()
+    try:
+        killed.send_signal(signal.SIGKILL)
+        killed.wait(60)
+        assert os.path.isdir(dead_root)
+        following, root = start()
+        following.communicate("\n", timeout=60)
+        assert root and not os.path.exists(dead_root)
+        assert os.path.isdir(live_root)
+    finally:
+        live.communicate("\n", timeout=60)
     assert not [p for p in os.listdir(tmp_path) if p.startswith("fis_")]

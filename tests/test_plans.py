@@ -997,7 +997,8 @@ def test_serving_plans_over_one_partition_snapshot_have_no_exchange(spark, sf_sm
     from file_indexer_spark.operators import search as srch
     from file_indexer_spark.operators import stats as st
 
-    snap = sv.FileIndexService(files_df(spark, sf_smoke)).files
+    svc = sv.FileIndexService(files_df(spark, sf_smoke))
+    snap = svc.files
     try:
         assert snap.rdd.getNumPartitions() == 1
         search_page, _ = sv.observed_page(
@@ -1009,7 +1010,7 @@ def test_serving_plans_over_one_partition_snapshot_have_no_exchange(spark, sf_sm
         for df in (search_page, dup_page, sv.chart_rows(snap), st.database_stats(snap)):
             assert pi.count_exchanges(df) == 0, pi.simple_plan(df)
     finally:
-        snap.unpersist()
+        svc.close()
 
 
 def test_database_stats_plans_no_expand(spark, sf_smoke):

@@ -7,10 +7,12 @@ block at the bottom, import-gated like create_app)."""
 
 from __future__ import annotations
 
+import copy
 import datetime as dt
 import threading
 
 import pytest
+from pyspark.sql import functions as F
 
 from file_indexer_spark import serving as sv
 from file_indexer_spark.session import tune_session
@@ -206,7 +208,7 @@ def test_empty_snapshot(spark, sf_smoke):
         assert empty.visualization() == {
             "size_distribution": [], "extension_stats": [], "modification_timeline": []}
     finally:
-        empty.files.unpersist()
+        empty.close()
 
 
 def test_each_request_is_one_job(spark, svc):
@@ -225,14 +227,155 @@ def test_each_request_is_one_job(spark, svc):
         ("stats", svc.stats, 2),
     )
     for name, call, most in requests:
-        group = f"serve-job-guard-{name}"
-        sc.setJobGroup(group, f"{name} job-count guard")
-        try:
-            call()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= most, name
+        assert _jobs(sc, name, call) <= most, name
+
+
+def _jobs(sc, name, call) -> int:
+    """How many Spark jobs ``call()`` submits from this thread."""
+    group = f"serve-job-guard-{name}"
+    sc.setJobGroup(group, f"{name} job-count guard")
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _crafted_files(spark):
+    """A one-partition snapshot with NULL checksums, groups of 1-4 rows,
+    a size-0 group, a checksum at two sizes with one row each, and
+    checksum "x": two rows at size 100 and one at size 200, where that
+    singleton-size row is the only match of ``%.zz`` and of ``/only/%``."""
+    t = dt.datetime(2024, 1, 1)
+    rows = [("/p1", "n1.txt", None, 10), ("/p2", "n2.txt", None, 10), ("/p1", "n3.log", None, 0),
+            ("/p1", "a1.txt", "a", 50)]
+    for checksum, n, size in (("b", 2, 70), ("c", 3, 300), ("d", 4, 20), ("e", 2, 0)):
+        rows += [(f"/p{1 + i % 2}", f"f{checksum}{i}.txt", checksum, size) for i in range(n)]
+    rows += [("/p1", "y1.log", "y", 5), ("/p2", "y2.log", "y", 6),
+             ("/p1", "x1.txt", "x", 100), ("/p2", "x2.txt", "x", 100), ("/only", "x3.zz", "x", 200)]
+    return spark.createDataFrame(
+        [(p, f, c, t + dt.timedelta(days=i), s, t) for i, (p, f, c, s) in enumerate(rows)],
+        "path string, filename string, checksum string, modification_datetime timestamp, "
+        "file_size bigint, indexed_at timestamp").coalesce(1)
+
+
+def _reference_duplicates(files, req):
+    """The answer over the whole snapshot, without the service."""
+    from file_indexer_spark.operators.duplicates import group_duplicates, group_order, scope_to_pattern
+
+    scope = scope_to_pattern(files, req.filename_pattern, req.path_pattern,
+                             req.min_file_size, req.max_file_size)
+    page, obs = sv.observed_page(
+        group_duplicates(scope, req.min_group_size), group_order(), req.limit, req.offset,
+        total_groups=F.count(F.lit(1)),
+        total_wasted_space=F.coalesce(F.sum("wasted_space"), F.lit(0)))
+    rows = page.collect()
+    return rows, obs.get["total_groups"], obs.get["total_wasted_space"]
+
+
+def test_duplicates_from_the_duplicated_rows_equal_the_whole_snapshot(spark):
+    """The service answers ``duplicates`` from its cached frame of the
+    rows whose checksum is shared; every request of the grid must equal
+    the same operators over the whole snapshot."""
+    files = _crafted_files(spark)
+    svc = sv.FileIndexService(files)
+    try:
+        patterns = ((None, None), ("%.zz", None), (None, "/only/%"), ("f%", "/p2"),
+                    ("nomatch%", None))
+        bounds = ((None, None), (150, None), (0, 0), (10, 5))
+        seen = set()
+        for filename, path in patterns:
+            for low, high in bounds:
+                # with limit 3 these pages cut every group order, and
+                # offset 50 is past the end
+                for size, offsets in ((2, (0, 3)), (3, (1, 50))):
+                    for offset in offsets:
+                        req = sv.DuplicatesRequest(
+                            min_group_size=size, filename_pattern=filename, path_pattern=path,
+                            min_file_size=low, max_file_size=high, limit=3, offset=offset)
+                        got = svc.duplicates(req)
+                        rows, total, wasted = _reference_duplicates(svc.files, req)
+                        assert (got.groups, got.total_groups, got.total_wasted_space) == (
+                            rows, total, wasted), req
+                        assert got.has_more == (offset + len(rows) < total), req
+                        seen.update((g["checksum"], g["file_size"]) for g in rows)
+        # the grid reaches every group, the size-0 one and the copies of
+        # "x" that only their singleton-size sibling matches
+        assert seen == {("b", 70), ("c", 300), ("d", 20), ("e", 0), ("x", 100)}
+        scoped = svc.duplicates(sv.DuplicatesRequest(filename_pattern="%.zz", min_file_size=150))
+        assert [(g["checksum"], g["file_size"], g["file_count"]) for g in scoped.groups] == [
+            ("x", 100, 2)]
+    finally:
+        svc.close()
+
+
+def test_derived_answers_cost_jobs_once(spark):
+    """On a fresh service the first duplicates request fills the
+    snapshot and the duplicated rows; every later one is one job. The
+    first stats call is at most two jobs and the first visualization
+    one; later stats and visualization calls run none."""
+    sc = spark.sparkContext
+    svc = sv.FileIndexService(_crafted_files(spark))
+    try:
+        # adaptive execution runs each unfilled cache a plan reads as a
+        # stage of its own (TableCacheQueryStage), so this request also
+        # runs the jobs that fill the snapshot and the frame
+        assert _jobs(sc, "first-duplicates", lambda: svc.duplicates(sv.DuplicatesRequest())) <= 5
+        for i, req in enumerate((sv.DuplicatesRequest(),
+                                 sv.DuplicatesRequest(path_pattern="/p1%", offset=1))):
+            assert _jobs(sc, f"next-duplicates-{i}", lambda: svc.duplicates(req)) == 1
+        assert _jobs(sc, "first-stats", svc.stats) <= 2
+        assert _jobs(sc, "first-visualization", svc.visualization) == 1
+        for i, (name, call) in enumerate((("stats", svc.stats),
+                                          ("visualization", svc.visualization)) * 2):
+            assert _jobs(sc, f"later-{name}-{i}", call) == 0, name
+    finally:
+        svc.close()
+
+
+def test_memoized_answers_are_copies_computed_once(spark):
+    """Mutating a returned answer leaves the next one unchanged; two
+    first ``stats`` calls at once run one computation; ``close`` drops
+    both cached frames."""
+    from pyspark import StorageLevel
+
+    sc = spark.sparkContext
+    svc = sv.FileIndexService(_crafted_files(spark))
+    try:
+        svc.files.count()  # the snapshot's own fill is not the computation counted
+        barrier = threading.Barrier(2)
+        counts = []
+
+        def first_stats(name):
+            barrier.wait()
+            counts.append(_jobs(sc, f"racing-stats-{name}", svc.stats))
+
+        threads = [threading.Thread(target=first_stats, args=(i,)) for i in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(300)
+        assert sorted(counts)[0] == 0 and 1 <= sorted(counts)[1] <= 2, counts
+
+        stats = svc.stats()
+        want = dict(stats)
+        stats["total_files"] = -1
+        assert svc.stats() == want
+        charts = svc.visualization()
+        want = copy.deepcopy(charts)
+        charts["extension_stats"][0]["count"] = -1
+        charts["size_distribution"].clear()
+        assert svc.visualization() == want
+
+        svc.duplicates(sv.DuplicatesRequest())
+        frames = (svc.files, svc._duplicated)
+        assert all(f.storageLevel != StorageLevel.NONE for f in frames)
+        cached = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+    finally:
+        svc.close()
+    assert all(f.storageLevel == StorageLevel.NONE for f in frames)
+    assert len(cached - {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}) == 2
 
 
 def test_service_over_a_frame_without_statistics(spark, sf_smoke, svc):
@@ -260,7 +403,7 @@ def test_service_over_a_frame_without_statistics(spark, sf_smoke, svc):
             row["average_size"] = pytest.approx(row["average_size"])
         assert b == a
     finally:
-        other.files.unpersist()
+        other.close()
 
 
 def test_routes_through_testclient(spark, sf_smoke):
