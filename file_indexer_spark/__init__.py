@@ -25,7 +25,6 @@ Layout:
     indexer/      the write path: distributed scan, two-phase checksum,
                   bucketed upsert/merge, cleanup (anti-join deletion)
     streaming/    watermarked windows + foreachBatch incremental index
-    plans/        plan-inspection helpers (pushdown / join assertions)
 """
 
 __version__ = "0.1.0"

@@ -146,68 +146,6 @@ def keyset_directory_page(
     return out.distinct().orderBy("path").limit(limit)
 
 
-def keyset_directory_pages(files: DataFrame, page_size: int = 10_000):
-    """O4 directory loop (reference indexer.py:1329-1361): yields lists
-    of distinct directory paths, one memory-bounded page at a time."""
-    after: str | None = None
-    while True:
-        page = keyset_directory_page(files, after_path=after, limit=page_size).collect()
-        if not page:
-            return
-        yield [r["path"] for r in page]
-        if len(page) < page_size:
-            return
-        after = page[-1]["path"]
-
-
-def keyset_pages(files: DataFrame, page_size: int = 10_000):
-    """O4: memory-bounded keyset pagination loop.
-
-    Reference indexer.py:1078-1109 pages the whole table through a
-    cursor purely for client memory safety. Yields each page as a list
-    of Rows; the driver holds one page at a time. In Spark batch jobs
-    prefer full-table processing — this exists for parity with clients
-    that stream the index out (e.g. the JSON export path).
-    """
-    after: tuple[str, str] | None = None
-    while True:
-        page = keyset_page(
-            files,
-            after_path=after[0] if after else None,
-            after_filename=after[1] if after else None,
-            limit=page_size,
-        ).collect()
-        if not page:
-            return
-        yield page
-        if len(page) < page_size:
-            return
-        last = page[-1]
-        after = (last["path"], last["filename"])
-
-
-def stream_grouped_duplicates(files: DataFrame):
-    """O5: streaming fetchmany + run-length grouping.
-
-    Reference indexer.py:766-794 streams checksum-sorted duplicate rows
-    through a cursor and emits a group whenever the checksum changes.
-    ``toLocalIterator`` is Spark's fetchmany: one partition is in driver
-    memory at a time. Yields (checksum, [rows]) groups.
-    """
-    from file_indexer_spark.operators.duplicates import duplicate_files
-
-    rows = duplicate_files(files).toLocalIterator()
-    group_key, group = None, []
-    for row in rows:
-        if row["checksum"] != group_key:
-            if group:
-                yield group_key, group
-            group_key, group = row["checksum"], []
-        group.append(row)
-    if group:
-        yield group_key, group
-
-
 def batch_probe(files: DataFrame, keys: DataFrame) -> DataFrame:
     """Batch PK probe (reference P6, indexer.py:228-266: row-value IN).
 

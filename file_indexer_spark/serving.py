@@ -206,21 +206,18 @@ class FileIndexService:
     snapshot makes concurrent reads safe, the reference's
     read-only-connection trick for free.
 
-    With ``cache`` (the default) the service also keeps the state its
-    requests share: the ``stats`` and ``visualization`` answers, each
-    computed at most once, and the cached duplicated-rows frame that
-    ``duplicates`` reads (see the module docstring). With
-    ``cache=False`` the snapshot may change under the service, so every
-    request is computed from it. ``close`` releases the cached frames."""
+    The service also keeps the state its requests share: the ``stats``
+    and ``visualization`` answers, each computed at most once, and the
+    cached duplicated-rows frame that ``duplicates`` reads (see the
+    module docstring). ``close`` releases the cached frames."""
 
-    def __init__(self, files: DataFrame, cache: bool = True, source_path: str | None = None):
+    def __init__(self, files: DataFrame, source_path: str | None = None):
         # The service keeps its own copy of the snapshot, sized by bytes
         # (see _snapshot) and cached, so that each request after the
         # first reads memory, not parquet, in a plan with no exchange.
-        snapshot = _snapshot(files)
-        self.files = snapshot.cache() if cache else snapshot
-        self._duplicated = _duplicated_rows(self.files).cache() if cache else self.files
-        self._memo: dict | None = {} if cache else None
+        self.files = _snapshot(files).cache()
+        self._duplicated = _duplicated_rows(self.files).cache()
+        self._memo: dict = {}
         # one lock per answer: a first stats call never waits on a
         # first visualization call
         self._locks = {name: threading.Lock() for name in ("stats", "visualization")}
@@ -229,10 +226,8 @@ class FileIndexService:
         self.source_path = source_path
 
     def _memoized(self, name: str, compute):
-        """``compute()``, run at most once per service when it caches;
-        each caller gets its own copy, free to mutate."""
-        if self._memo is None:
-            return compute()
+        """``compute()``, run at most once per service; each caller gets
+        its own copy, free to mutate."""
         with self._locks[name]:
             if name not in self._memo:
                 self._memo[name] = compute()

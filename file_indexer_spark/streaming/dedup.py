@@ -51,22 +51,6 @@ def dedup_stream(stream: DataFrame) -> DataFrame:
     )
 
 
-def dedup_stream_bounded(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """The unbounded-stream variant: ``dropDuplicatesWithinWatermark``
-    keeps state only for hashes inside the watermark horizon, so state
-    is O(distinct hashes per window) instead of O(distinct hashes
-    ever) — the trade is that a re-arrival later than the horizon
-    passes again (exact forever-dedup and bounded state can't coexist;
-    pair this with a periodic batch dd1 pass downstream). Requires an
-    event-time column ``ts`` on the stream."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .select("ts", F.md5(F.encode("text", "utf-8")).alias("content_hash"))
-        .dropDuplicatesWithinWatermark(["content_hash"])
-        .select("content_hash")
-    )
-
-
 def run_to_memory_sink(stream_df: DataFrame, table_name: str) -> DataFrame:
     from file_indexer_spark.streaming.util import run_to_memory_sink as _run
 

@@ -292,10 +292,9 @@ def test_service_visualization_and_health(spark, sf_smoke):
     assert h["api_version"] == "0.1.0"
     assert h["database_path"] is None
 
-    svc2 = FileIndexService(
-        files_df(spark, sf_smoke), cache=False, source_path="/data/files"
-    )
+    svc2 = FileIndexService(files_df(spark, sf_smoke), source_path="/data/files")
     assert svc2.health()["database_path"] == "/data/files"
+    svc2.close()
     svc.close()
 
 

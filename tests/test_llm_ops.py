@@ -1152,7 +1152,7 @@ def test_ivfpq_serving_from_materialized_index(embeddings, tmp_path):
     plan (the scan reads 4-byte codes, never the float corpus)."""
     from pyspark.sql import functions as F
 
-    from file_indexer_spark.plans import inspect as pi
+    from tests import plan_inspect as pi
 
     mats = {}
     for name, df in sim.ivfpq_index_tables(embeddings).items():
@@ -1328,7 +1328,7 @@ def test_ivfpq_compact_folds_mask_and_preserves_ranking(embeddings, tmp_path):
     after_df = sim.ivfpq_topk_from_index(compacted, queries)
     # compaction restores the bare sim11 serve shape: no Python eval,
     # no anti-join left in the plan
-    from file_indexer_spark.plans import inspect as pi
+    from tests import plan_inspect as pi
 
     plan = pi.simple_plan(after_df)
     assert "EvalPython" not in plan

@@ -460,7 +460,7 @@ def test_x2_report_phase_never_touches_blobs(spark, tmp_path):
     no Python eval (= no decode) anywhere in its plan — and returns
     the identical report x1 computes from raw docs."""
     from file_indexer_spark.operators import crossmodal as xm
-    from file_indexer_spark.plans import inspect as pi
+    from tests import plan_inspect as pi
 
     text = ("the quick brown fox jumps over the lazy dog again and "
             "again because near duplicate detection needs shingles ") * 2

@@ -1,5 +1,5 @@
-"""Keyset pagination (P7/O4) and streaming group assembly (O5) —
-reference file_indexer/indexer.py:1078-1109 and :766-794 semantics."""
+"""Keyset pagination (P7) — reference file_indexer/indexer.py:1078-1109
+and :1329-1361 semantics."""
 
 from __future__ import annotations
 
@@ -13,13 +13,29 @@ def _files(spark, sf_smoke):
     return files_df(spark, sf_smoke)
 
 
+def _walk(next_page, page_size: int) -> list:
+    """Rows of every page, each page fetched from the cursor row the
+    previous one ended on (None for the first), until a short page."""
+    rows, cursor = [], None
+    while True:
+        page = next_page(cursor).collect()
+        assert len(page) <= page_size
+        rows.extend(page)
+        if len(page) < page_size:
+            return rows
+        cursor = page[-1]
+
+
 def test_keyset_pages_cover_table_exactly_once(spark, sf_smoke):
     files = _files(spark, sf_smoke).cache()
     total = files.count()
-    seen = []
-    for page in srch.keyset_pages(files, page_size=37):
-        assert len(page) <= 37
-        seen.extend((r["path"], r["filename"]) for r in page)
+    rows = _walk(
+        lambda c: srch.keyset_page(
+            files, c and c["path"], c and c["filename"], limit=37
+        ),
+        37,
+    )
+    seen = [(r["path"], r["filename"]) for r in rows]
     assert len(seen) == total
     assert len(set(seen)) == total  # no duplicates across pages
     assert seen == sorted(seen)  # global (path, filename) order
@@ -41,24 +57,9 @@ def test_keyset_directory_pages_cover_dirs_exactly_once(spark, sf_smoke):
     DISTINCT paths, cursor-paged by path > ?, global order, no repeats."""
     files = _files(spark, sf_smoke).cache()
     expect = sorted(r["path"] for r in files.select("path").distinct().collect())
-    seen = []
-    for page in srch.keyset_directory_pages(files, page_size=7):
-        assert len(page) <= 7
-        seen.extend(page)
-    assert seen == expect
+    rows = _walk(lambda c: srch.keyset_directory_page(files, c and c["path"], limit=7), 7)
+    assert [r["path"] for r in rows] == expect
     # a single mid-table page matches the slice of the full ordering
     cursor = expect[4]
     page = [r["path"] for r in srch.keyset_directory_page(files, cursor, limit=3).collect()]
     assert page == expect[5:8]
-
-
-def test_stream_grouped_duplicates_runs_groups(spark, sf_smoke):
-    files = _files(spark, sf_smoke).cache()
-    groups = list(srch.stream_grouped_duplicates(files))
-    assert groups, "smoke corpus has duplicate checksums"
-    for checksum, members in groups:
-        assert len(members) >= 2
-        assert all(m["checksum"] == checksum for m in members)
-    # every group exactly once
-    keys = [c for c, _ in groups]
-    assert len(keys) == len(set(keys))

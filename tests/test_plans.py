@@ -9,8 +9,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from file_indexer_spark.operators import duplicates as dup
-from file_indexer_spark.plans import inspect as pi
 from file_indexer_spark.tables import files_df, load_table
+from tests import plan_inspect as pi
 
 
 def test_files_derivation_prunes_text_column(spark, sf_smoke):

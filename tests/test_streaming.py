@@ -269,70 +269,6 @@ def test_streaming_curation_matches_batch_pipeline(spark, tmp_path):
     assert any(r["n_after_quality"] < r["n_after_dedup"] for r in want)
 
 
-def test_bounded_dedup_state_readmits_past_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: a duplicate INSIDE the horizon is
-    filtered; the same content re-arriving far past the horizon is
-    admitted again (state for the old hash was dropped) — the bounded
-    state contract for unbounded ingestion streams."""
-    from pyspark.sql import types as T
-
-    from file_indexer_spark.streaming import dedup as sd
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), True),
-            T.StructField("ts", T.TimestampType(), True),
-            T.StructField("text", T.StringType(), True),
-        ]
-    )
-    src = str(tmp_path / "docs_ts")
-    mk = lambda rows: spark.createDataFrame(rows, schema)
-    # batch 1: first copy at t0; batch 2: dup 10 min later (inside the
-    # 1h horizon) + a watermark-advancing row; batch 3: the SAME
-    # content 10 DAYS later (far past the horizon) + another advancer
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    b1 = mk([(1, t0, "aaa")])
-    b2 = mk([(2, t0 + dt.timedelta(minutes=10), "aaa"),
-             (3, t0 + dt.timedelta(hours=3), "bbb")])
-    b3 = mk([(4, t0 + dt.timedelta(days=10), "aaa"),
-             (5, t0 + dt.timedelta(days=10, hours=3), "ccc")])
-    b4 = mk([(6, t0 + dt.timedelta(days=20), "aaa"),
-             (7, t0 + dt.timedelta(days=20, hours=3), "ddd")])
-    # pinned mtimes: the file source replays in mtime order, and rapid
-    # writes can land in the same mtime second
-    from file_indexer_spark.registry import _land_arrivals
-
-    _land_arrivals(src, [b1, b2, b3, b4])
-
-    stream = (
-        spark.readStream.format("parquet").schema(schema)
-        .option("maxFilesPerTrigger", 1).load(src)
-    )
-    drained = sd.run_to_memory_sink(sd.dedup_stream_bounded(stream), "st4b_sink")
-    hashes = [r["content_hash"] for r in drained.collect()]
-    import hashlib
-
-    aaa = hashlib.md5(b"aaa").hexdigest()
-    # Guaranteed contract only (exact eviction timing is an engine
-    # internal — on the pinned Spark version state eviction lands one
-    # micro-batch behind the watermark, so the day-10 re-arrival is
-    # still filtered, but a version could legitimately evict sooner):
-    #   * the within-horizon dup (doc 2, 10 min later) is FILTERED;
-    #   * the first copy and a far-late re-arrival (day 20 — two
-    #     batches past expiry, admitted under any eviction lag) are
-    #     both EMITTED, so "aaa" appears at least twice;
-    #   * the day-10 re-arrival may be filtered (lagged eviction) or
-    #     admitted (prompt eviction) — both are correct bounded-state
-    #     behavior, so "aaa" appears 2 or 3 times and nothing else
-    #     duplicates.
-    uniques = {h for h in hashes if h != aaa}
-    assert 2 <= hashes.count(aaa) <= 3, hashes
-    assert len(uniques) == 3  # bbb, ccc, ddd each admitted
-    assert len(hashes) == len(uniques) + hashes.count(aaa)  # no other dups
-
-
 def test_stream_stream_interval_join_matches_across_batches(spark, tmp_path):
     """st9: a view landing in batch 1 must pair with a purchase landing
     in batch 2 out of retained join state; views outside the window (too
