@@ -249,14 +249,17 @@ def _dispatch(args: argparse.Namespace, spark: SparkSession) -> int:
         return 0
 
     if args.command == "cleanup":
-        from file_indexer_spark.indexer.cleanup import cleanup_empty_directories, probe_deleted_files
+        from pyspark.sql import functions as F
 
+        from file_indexer_spark.indexer.cleanup import probe_deleted_files
+
+        # the probe already holds every row under a vanished directory,
+        # so one pass and one count job cover both numbers
         stale = probe_deleted_files(table)
-        n = stale.count()
-        if n:
+        got = stale.agg(F.count("*").alias("n"), F.count_if("in_vanished_dir").alias("dirs")).first()
+        if got["n"]:
             table.delete(stale)
-        n_dirs = cleanup_empty_directories(spark, table)
-        print(f"removed {n} stale file row(s), {n_dirs} row(s) in vanished directories")
+        print(f"removed {got['n']} stale file row(s), {got['dirs']} of them in vanished directories")
         return 0
 
     if args.command == "sql":

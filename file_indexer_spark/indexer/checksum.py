@@ -74,6 +74,9 @@ def add_checksums(files: DataFrame, algorithm: str = "sha256") -> DataFrame:
     Arrow-batched (mapInPandas): one Python hop per batch, hashing I/O
     runs fully parallel across executor tasks. Input partitioning is
     preserved — repartition upstream if hash work is skewed by size.
+    A ``FilesTable`` read that fits one split is one partition
+    (``files_table.one_split``), so phase 2 over such a table hashes in
+    one task.
     """
     # build a NEW StructType: StructType.add mutates in place, and
     # df.schema is cached on the DataFrame — mutating it corrupts the

@@ -7,8 +7,8 @@ per dir, skip subdirs of deleted dirs — README.md:227-241 claims up to
 LEFT ANTI join — the scan is embarrassingly parallel and the anti-join
 replaces every probe. A probe-mode is kept for the case where a rescan
 is more expensive than targeted stat() calls (sparse deletions on slow
-storage): it deduplicates to DISTINCT paths first — the same
-directory-first trick, expressed relationally.
+storage): each task stats each distinct path it holds once, before any
+file under it — the same directory-first trick.
 """
 
 from __future__ import annotations
@@ -54,45 +54,45 @@ def cleanup_deleted_files(
 
 def probe_deleted_files(table: FilesTable) -> DataFrame:
     """Probe-mode D3: no rescan — executors stat() each indexed entry,
-    directory-first. Phase 1 checks each DISTINCT path once (the
-    reference's _check_directory_existence, indexer.py:926-947); files
-    under missing dirs are stale without any per-file syscall. Phase 2
-    stats only files in surviving dirs.
+    directory-first. Each task checks each distinct path it holds once
+    (the reference's _check_directory_existence, indexer.py:926-947);
+    files under a missing dir are stale without any per-file syscall,
+    and only files in surviving dirs are stat()ed. On a bucketed table
+    a path's rows share one bucket dir, so as a rule they meet in one
+    task.
+
+    Each stale row carries ``in_vanished_dir``: true for a row whose
+    directory is gone, false for a missing file in a surviving
+    directory. Every row under a vanished directory is already here,
+    so a later :func:`cleanup_empty_directories` pass finds none.
+
+    One pass over the table's rows, with no join: the result keeps the
+    read's partitioning and size, so over a table of one split its
+    count and the delete that follows plan no exchange.
 
     The result is materialized here (eager local checkpoint), so the
     caller's count and delete see the same rows and neither re-runs
     the stat passes."""
-    files = table.read()
-    dirs = files.select("path").distinct()
 
-    def probe_dirs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
+    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        dir_exists: dict[str, bool] = {}
         for pdf in batches:
-            yield pd.DataFrame(
-                {"path": pdf["path"], "dir_exists": [os.path.isdir(p) for p in pdf["path"]]}
-            )
-
-    dir_state = dirs.mapInPandas(probe_dirs, schema="path string, dir_exists boolean")
-
-    def probe_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            exists = [
-                os.path.lexists(os.path.join(p, f)) for p, f in zip(pdf["path"], pdf["filename"])
-            ]
+            gone, stale = [], []
+            for p, f in zip(pdf["path"], pdf["filename"]):
+                if p not in dir_exists:
+                    dir_exists[p] = os.path.isdir(p)
+                gone.append(not dir_exists[p])
+                stale.append(gone[-1] or not os.path.lexists(os.path.join(p, f)))
             out = pdf[["path", "filename"]].copy()
-            out["file_exists"] = exists
-            yield out
+            out["in_vanished_dir"] = gone
+            yield out.loc[stale]
 
-    with_dir = files.select(*PK).join(dir_state, "path", "inner")
-    in_dead_dir = with_dir.filter(~F.col("dir_exists")).select(*PK)
-    survivors = with_dir.filter(F.col("dir_exists")).select(*PK)
-    missing_files = (
-        survivors.mapInPandas(probe_files, schema="path string, filename string, file_exists boolean")
-        .filter(~F.col("file_exists"))
+    return (
+        table.read()
         .select(*PK)
+        .mapInPandas(probe, schema="path string, filename string, in_vanished_dir boolean")
+        .localCheckpoint(eager=True)
     )
-    return in_dead_dir.unionByName(missing_files).localCheckpoint(eager=True)
 
 
 def cleanup_empty_directories(spark: SparkSession, table: FilesTable) -> int:

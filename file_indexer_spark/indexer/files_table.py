@@ -94,6 +94,25 @@ PK = ["path", "filename"]
 BUCKET_COL = "pk_bucket"
 
 
+def one_split(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to one partition when its optimized plan's bytes
+    fit ``spark.sql.files.maxPartitionBytes`` (128 MB by default), else
+    ``df`` unchanged.
+
+    A parquet scan reports an unknown partitioning even when it reads
+    one split, so every aggregate, distinct and join over it plans an
+    exchange, and adaptive execution runs each exchange as a job of its
+    own. ``CoalesceExec(1)`` reports ``SinglePartition``, which
+    satisfies every distribution, so over a frame that fits one split
+    those exchanges disappear; a join drops them when both sides are one
+    partition and both size estimates fit
+    ``spark.sql.maxSinglePartitionBytes``. A frame without file
+    statistics reports Long.MaxValue bytes and keeps its partitions."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    split = df.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return df.coalesce(1) if size <= split else df
+
+
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed between this writer's read snapshot and
     its commit attempt (w9). The table holds the OTHER writer's commit,
@@ -702,12 +721,17 @@ class FilesTable:
 
     def _read_dirs(self, rels: list[str], schema: T.StructType) -> DataFrame:
         """The rows of the given data dirs under ``schema``: absent
-        columns (dirs written pre-evolution) null-fill."""
+        columns (dirs written pre-evolution) null-fill. Sized by
+        :func:`one_split`: dirs that fit one split read as one
+        partition, so the reports and merges over them plan no
+        exchange."""
         if not rels:
-            return self.spark.createDataFrame([], schema)
+            # limit 0 folds to an empty local relation: known empty, so a
+            # merge against it plans no join
+            return self.spark.createDataFrame([], schema).limit(0)
         paths = [os.path.join(self.location, r) for r in rels]
-        return self.spark.read.schema(schema).parquet(*paths).select(
-            *[f.name for f in schema.fields]
+        return one_split(
+            self.spark.read.schema(schema).parquet(*paths).select(*[f.name for f in schema.fields])
         )
 
     def _read_slice(self, touched: list[int]) -> DataFrame:

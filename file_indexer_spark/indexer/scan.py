@@ -174,6 +174,11 @@ def scan_raw(
             f"{pending} directories not listed"
         )
     raw = reduce(DataFrame.unionByName, rounds).filter(F.col("kind") != KIND_DIR)
+    if len(rounds) == 1:
+        # one task's output: say so, so the merge with a table of one
+        # split plans no exchange (the scan's size estimate is not its
+        # output's, so the table's split rule cannot size it)
+        raw = raw.coalesce(1)
     return raw, dict(counts)
 
 

@@ -99,13 +99,13 @@ def update_index(
     hashed = None
     try:
         # one pass: fate counts + reuse (reference indexer.py:~303 only
-        # counts a reuse when the stored checksum was actually non-NULL)
-        counts = {
-            r["fate"]: (r["n"], r["with_checksum"])
-            for r in merged.groupBy("fate")
-            .agg(F.count("*").alias("n"), F.count("old_checksum").alias("with_checksum"))
-            .collect()
-        }
+        # counts a reuse when the stored checksum was actually non-NULL);
+        # a global aggregate, so a one-partition merge plans no exchange
+        fate = F.col("fate")
+        counts = merged.agg(
+            *[F.count_if(fate == f).alias(f) for f in ("insert", "update", "unchanged", "missing")],
+            F.count_if((fate == "unchanged") & F.col("old_checksum").isNotNull()).alias("reused"),
+        ).first()
 
         changed = merged.filter(F.col("fate").isin("insert", "update")).select(
             "path",
@@ -132,13 +132,13 @@ def update_index(
         table.upsert(upserts.withColumn("indexed_at", F.current_timestamp()))
 
         return IndexStats(
-            files_inserted=counts.get("insert", (0, 0))[0],
-            files_updated=counts.get("update", (0, 0))[0],
-            files_unchanged=counts.get("unchanged", (0, 0))[0],
+            files_inserted=counts["insert"],
+            files_updated=counts["update"],
+            files_unchanged=counts["unchanged"],
             checksums_calculated=n_hashed - n_hash_errors,
-            checksums_reused=counts.get("unchanged", (0, 0))[1],
+            checksums_reused=counts["reused"],
             extra={
-                "missing_from_disk": counts.get("missing", (0, 0))[0],
+                "missing_from_disk": counts["missing"],
                 "hash_errors": n_hash_errors,
                 **scan_counters,
             },

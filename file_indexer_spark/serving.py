@@ -9,8 +9,9 @@ page and its totals come from one action: the totals are observed
 TakeOrderedAndProject — no full materialization.
 
 ``FileIndexService`` serves every request from its own cached copy of
-the snapshot, coalesced to the partitions a scan of it would read: one
-up to ``spark.sql.files.maxPartitionBytes`` (128 MB by default). On one
+the snapshot, sized by the table layer's split rule
+(``files_table.one_split``): one partition when the snapshot fits
+``spark.sql.files.maxPartitionBytes`` (128 MB by default). On one
 partition the planner needs no exchange for any aggregate, so a search
 or duplicates request is one Spark job.
 
@@ -39,6 +40,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from file_indexer_spark.indexer.files_table import one_split
 from file_indexer_spark.operators.duplicates import group_duplicates, group_order, scope_to_pattern
 from file_indexer_spark.operators.search import search_matches, search_order
 from file_indexer_spark.operators.stats import (
@@ -101,22 +103,6 @@ def paginate(df: DataFrame, order_by: list, limit: int, offset: int = 0) -> Page
         offset=offset,
         has_more=offset + len(rows) < total,
     )
-
-
-def _snapshot(files: DataFrame) -> DataFrame:
-    """``files`` coalesced to ``min(its partitions, ceil(plan size /
-    spark.sql.files.maxPartitionBytes))``: the partitions a scan of it
-    would be split into, never more than it has. A frame without file
-    statistics reports Long.MaxValue bytes, so the cap is what keeps the
-    count an int."""
-    size = files._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    split = files.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    n = -(-size // split)
-    if n > 1:
-        # only asked when it can matter: a frame with a shuffle runs it
-        # to report its partition count
-        n = min(n, files.rdd.getNumPartitions())
-    return files.coalesce(max(n, 1))
 
 
 def _duplicated_rows(files: DataFrame) -> DataFrame:
@@ -213,9 +199,9 @@ class FileIndexService:
 
     def __init__(self, files: DataFrame, source_path: str | None = None):
         # The service keeps its own copy of the snapshot, sized by bytes
-        # (see _snapshot) and cached, so that each request after the
+        # (see one_split) and cached, so that each request after the
         # first reads memory, not parquet, in a plan with no exchange.
-        self.files = _snapshot(files).cache()
+        self.files = one_split(files).cache()
         self._duplicated = _duplicated_rows(self.files).cache()
         self._memo: dict = {}
         # one lock per answer: a first stats call never waits on a

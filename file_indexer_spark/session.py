@@ -352,6 +352,19 @@ def _conf_dir_for_launch(conf_dir: str | None):
             os.environ["SPARK_CONF_DIR"] = old
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """The driver heap when ``SPARK_DRIVER_MEMORY`` is unset: half of the
+    host's MemTotal in whole GiB, at least 1g and at most 16g (16g where
+    MemTotal cannot be read). A 16g heap on a 15 GB host let two sessions
+    at once fill its memory."""
+    try:
+        with open(meminfo) as fh:
+            kib = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, IndexError, ValueError):
+        return "16g"
+    return f"{min(16, max(1, kib // 2**21))}g"
+
+
 def get_spark(
     app_name: str = "file_indexer_spark",
     shuffle_partitions: int | None = None,
@@ -372,7 +385,7 @@ def get_spark(
     from pyspark import SparkContext
 
     cpus = str(cpus) if cpus is not None else os.environ.get("SPARK_GRAFT_CPUS", "32")
-    memory = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+    memory = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
     launching = SparkContext._gateway is None
     archive, no_archive, failed_marker = None, "", None
     if launching and not dump_archive:

@@ -23,7 +23,7 @@ from file_indexer_spark import session
 from file_indexer_spark.cli import main
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-MEMORY = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+MEMORY = os.environ.get("SPARK_DRIVER_MEMORY") or session.default_driver_memory()
 
 # Starts a session with the build stubbed out ("stub"), failing ("fail")
 # or real ("real"); "again" asks for the session a second time and
@@ -59,7 +59,7 @@ CHILD = textwrap.dedent("""
     }
     session.stop_jvm(spark)
     launched = len(builds)
-    session._prepare_archive(os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+    session._prepare_archive(os.environ.get("SPARK_DRIVER_MEMORY") or session.default_driver_memory())
     report["next_launch_builds"] = len(builds) - launched
     print(json.dumps(report))
 """)
@@ -143,6 +143,25 @@ def test_archive_key_follows_cache_home_and_heap_regime(tmp_path, monkeypatch):
     monkeypatch.delenv("XDG_CACHE_HOME")
     monkeypatch.setenv("HOME", str(tmp_path / "home"))
     assert session.cache_dir() == str(tmp_path / "home" / ".cache" / "file_indexer_spark")
+
+
+@pytest.mark.parametrize("mem_total_kib,heap", [
+    (16479424, "7g"),  # a 15.7 GiB host: half, rounded down to whole GiB
+    (64 * 2**20, "16g"),  # capped
+    (2**20, "1g"),  # a 1 GiB host still gets 1g
+    (3 * 2**20 - 1, "1g"),
+    (None, "16g"),  # no MemTotal line: the old default
+])
+def test_default_heap_is_half_the_host(tmp_path, mem_total_kib, heap):
+    meminfo = tmp_path / "meminfo"
+    lines = ["MemFree:         1000 kB"]
+    if mem_total_kib is not None:
+        lines.insert(0, f"MemTotal:       {mem_total_kib} kB")
+    meminfo.write_text("\n".join(lines) + "\n")
+    assert session.default_driver_memory(str(meminfo)) == heap
+    assert session.default_driver_memory(str(tmp_path / "absent")) == "16g"
+    # both regimes sit under 32 GiB, so they share one archive key
+    assert session._archive_plan(heap)[0] == session._archive_plan("16g")[0]
 
 
 @pytest.mark.parametrize("case",

@@ -112,15 +112,28 @@ def test_cli_index_search_duplicates_stats(spark, tree, tmp_path, capsys):
     assert "5" in capsys.readouterr().out
 
 
-def test_cli_cleanup_removes_deleted(spark, tree, tmp_path, capsys):
+def test_cli_cleanup_removes_deleted(spark, tree, tmp_path, capsys, monkeypatch):
+    """One probe finds the deleted file and the rows of the vanished
+    directory; the CLI counts both from it and runs no second
+    directory pass."""
+    import shutil
+
+    from file_indexer_spark.indexer import cleanup
+
+    def second_pass(*args, **kwargs):
+        raise AssertionError("cleanup_empty_directories ran")
+
+    monkeypatch.setattr(cleanup, "cleanup_empty_directories", second_pass)
     db = str(tmp_path / "db")
     main(["index", str(tree), "--db", db], spark=spark)
     capsys.readouterr()
+    shutil.rmtree(tree / "sub")
     (tree / "c.bin").unlink()
     assert main(["cleanup", "--db", db], spark=spark) == 0
-    assert "removed 1 stale file row(s)" in capsys.readouterr().out
+    assert "removed 2 stale file row(s), 1 of them in vanished directories" in (
+        capsys.readouterr().out)
     main(["stats", "--db", db], spark=spark)
-    assert "total_files: 4" in capsys.readouterr().out
+    assert "total_files: 3" in capsys.readouterr().out
 
 
 # ---------------------------------------------------------- O6 / S11
